@@ -107,10 +107,11 @@ object SparkEntry {
     "q38_embed_dedup"      -> DedupQueries.q38Sql,
     "q39_neardup_groups"   -> DedupQueries.q39Sql,
     "q40_jaccard_blocked"  -> DedupQueries.q40Sql,
-    // q41_ivf_topk intentionally has NO oracle SQL: the seeded KMeans
-    // quantizer's float reductions are partitioning-sensitive, so no
-    // portable cross-engine oracle exists; the driver records the weaker
-    // rows-only check and SimilaritySpec asserts recall vs brute force.
+    // q41_ivf_topk intentionally has NO oracle SQL: its quantizer (no
+    // MLlib fit) is a seeded Lloyd loop in one task over id-sorted rows,
+    // so it is partitioning-independent, but its JVM-seeded init and float
+    // Lloyd steps have no portable SQL replay; it is checked by rows only
+    // and SimilaritySpec asserts recall vs brute force.
     "q42_hash_split"       -> SamplingQueries.q42Sql,
     "q43_stratified_sample"-> SamplingQueries.q43Sql,
     "q44_pack_sequences"   -> SamplingQueries.q44Sql,

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.clean.Cleaner
 import graft.ingest.{Content, ContentFetcher, FixtureFetcher, LinkExtractor, LinkSource}
 
@@ -37,12 +38,13 @@ final class PipelineExecutor(
   }
 
   /** The reference's `execute` (pipeline_executor.py:72-127). Returns the
-    * clean paragraph-grain DataFrame.
+    * clean paragraph-grain DataFrame. Zones are opened with [[Tables.read]],
+    * so a cache hit submits no job before the caller's action.
     */
   def execute(spark: SparkSession, query: String, maxArticles: Int = 100,
               overwrite: Boolean = false): DataFrame = {
     val cp = cleanPath(query, maxArticles)
-    if (!overwrite && exists(spark, cp)) return spark.read.parquet(cp)
+    if (!overwrite && exists(spark, cp)) return Tables.read(spark, cp)
 
     // 2-4: links fan-out, null filter, content fetch (S3-S9, P1)
     val links = LinkExtractor.allLinks(spark, query, maxArticles, sources)
@@ -63,10 +65,9 @@ final class PipelineExecutor(
     raw.write.mode("overwrite").parquet(rawPath(query, maxArticles))
 
     // 6: clean + canonical projection, clean zone
-    val clean = Cleaner.cleanArticles(
-      spark.read.parquet(rawPath(query, maxArticles)))
+    val clean = Cleaner.cleanArticles(Tables.read(spark, rawPath(query, maxArticles)))
     clean.write.mode("overwrite").parquet(cp)
-    spark.read.parquet(cp)
+    Tables.read(spark, cp)
   }
 }
 

@@ -1,7 +1,9 @@
 package graft.queries
 
+import java.time.{ZoneId, ZoneOffset}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import graft.Tables
 import graft.util.Exact
 
@@ -20,22 +22,25 @@ import graft.util.Exact
 object EventQueries {
 
   /** events.ts as a session-UTC TIMESTAMP at exact micros precision,
-    * whichever parquet vintage the table carries (see object docs).
+    * whichever parquet vintage the table carries (see object docs). An
+    * instant-typed ts (TIMESTAMP, isAdjustedToUTC=true) passes through.
     */
-  private def tsMicros(df: DataFrame): org.apache.spark.sql.Column =
+  private[graft] def tsMicros(df: DataFrame): org.apache.spark.sql.Column =
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case _ =>
+      case LongType => timestamp_micros(expr("ts div 1000"))
+      case TimestampType => col("ts")
+      case TimestampNTZType =>
         // NTZ wall-clock → instant is interpreted in the SESSION time zone;
-        // parity with the oracle's epoch_ns(ts) // 1000 holds only under
-        // UTC (every graft entry point sets it). Assert loudly instead of
-        // silently shifting instants for a non-UTC caller (ADVICE r21).
-        require(
-          df.sparkSession.conf.get("spark.sql.session.timeZone") == "UTC",
-          "events.ts is TIMESTAMP_NTZ: tsMicros requires " +
-            "spark.sql.session.timeZone=UTC to match the oracle's micros")
+        // parity with the oracle's epoch_ns(ts) // 1000 holds only when that
+        // zone is UTC under any spelling ("UTC", "Etc/UTC", "+00:00"). Assert
+        // loudly instead of silently shifting instants for a non-UTC caller.
+        val tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+        require(ZoneId.of(tz).normalized == ZoneOffset.UTC,
+          "events.ts is TIMESTAMP_NTZ: tsMicros requires a UTC " +
+            s"spark.sql.session.timeZone to match the oracle's micros, got $tz")
         col("ts").cast("timestamp")
+      case other =>
+        throw new IllegalArgumentException(s"events.ts has unsupported type $other")
     }
 
   /** q34: tumbling 1-hour event-time windows × event_type, with exact

@@ -62,25 +62,24 @@ object SimQueries {
   }
 
   /** q41: IVF approximate top-5 for the same 10 query vectors — the
-    * 100 TB similarity path (coarse KMeans quantizer, nprobe-cell scan
-    * instead of full corpus). The KMeans fit is seeded but its float
-    * reductions are partitioning-sensitive, so there is no portable DuckDB
-    * oracle — the driver records the weaker rows/schema check, and
-    * SimilaritySpec asserts recall ≥ 0.6 against [[q28AnnTopk]]'s
-    * brute-force ranking.
+    * 100 TB similarity path (seeded Lloyd quantizer fitted in one task, no
+    * MLlib fit; nprobe-cell scan instead of the full corpus). The
+    * quantizer sees its sample in id order, so results do not depend on
+    * partitioning; still there is no DuckDB oracle, as the centroids come
+    * from a JVM-seeded random init and 8 float Lloyd steps that SQL cannot
+    * portably replay. It is checked by rows and schema only, and
+    * SimilaritySpec asserts recall against [[q28AnnTopk]]'s brute-force
+    * ranking.
     */
   def q41IvfTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables.balanced(spark, dir, "embeddings")
-    // totalRows hint (r22): sizes the quantizer's fit sample so the KMeans
-    // fit never runs over the full corpus at scale. Counted on the RAW scan
-    // (not the balanced frame) — a column-less parquet count comes from
-    // footer row counts, and counting through `balanced`'s round-robin
-    // exchange would shuffle empty rows for nothing.
-    val n = Tables(spark, dir, "embeddings").count()
+    // totalRows hint: sizes the quantizer's fit sample so the fit never
+    // sees the full corpus at scale. Summed from the parquet footers on
+    // the driver, so building q41 runs no count job.
     Similarity.ivfTopK(emb.filter($"vec_id" < 10), emb,
         "vec_id", "embedding", k = 5, nlist = 16, nprobe = 4,
-        totalRows = Some(n))
+        totalRows = Some(Tables.rowCount(spark, dir, "embeddings")))
       .orderBy($"query_id", $"rk")
   }
 

@@ -3,9 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.ml.linalg.Vectors
 import graft.functions.VectorOps
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -45,12 +42,23 @@ object Similarity {
         round(VectorOps.cosine(col("va"), col("vb")), 6).as("cosine"))
   }
 
-  /** IVF (inverted-file) approximate top-k — the 100 TB path: a KMeans
-    * coarse quantizer (nlist cells, seeded) partitions the corpus once;
-    * each query scans only its `nprobe` nearest cells instead of the full
-    * corpus. Centroids are a tiny broadcast dimension; the only big-side
-    * work is a hash join corpus⋈(query,cell) followed by per-query top-k.
-    * Recall tunes with nprobe; [[bruteForceTopK]] is the verifier.
+  /** IVF (inverted-file) approximate top-k — the 100 TB path: a coarse
+    * quantizer of `nlist` cells partitions the corpus once; each query
+    * scans only its `nprobe` nearest cells instead of the full corpus.
+    * Centroids are a tiny broadcast dimension: each corpus row takes its
+    * nearest one by `VectorOps.sqDist` (no shuffle), then a hash join
+    * corpus⋈(query,cell) feeds a per-query top-k. Recall tunes with
+    * nprobe; [[bruteForceTopK]] is the verifier.
+    *
+    * The quantizer is no MLlib fit but a seeded Lloyd loop (`nlist` random
+    * initial rows, 8 iterations) in ONE task over the fit sample sorted by
+    * id, so the centroids do not depend on partitioning. IVF needs
+    * roughly-balanced cells, not converged clusters (recall comes from
+    * nprobe, verified in SimilaritySpec). The sample is a deterministic
+    * md5(id) sample of about `fitSampleRows` rows, so a 100 TB corpus never
+    * lands in that task. Sizing it needs the corpus row count: `totalRows`
+    * is that hint (`Tables.rowCount` reads it from parquet footers without
+    * a job); with no hint the corpus is counted here, as the bound must hold.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -58,48 +66,24 @@ object Similarity {
               totalRows: Option[Long] = None): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
-    val withVec = corpus.withColumn("_mlvec", toVec(col(vecCol)))
-    // coarse quantizer settings: random init + few iterations. IVF needs
-    // roughly-balanced cells, not converged clusters — kmeans|| init plus
-    // 20 iterations costs ~30 sequential jobs for no recall gain here
-    // (recall comes from nprobe, verified in SimilaritySpec).
-    //
-    // The fit runs on a deterministic hash-sample of ~fitSampleRows rows,
-    // not the full corpus: 8 KMeans iterations over 100 TB would be 8 full
-    // scans just to place rough cell boundaries, and cell shape converges
-    // with a bounded sample. The sample is md5(id)-thresholded
-    // (Sampling.deterministicSample), so the quantizer — hence cell
-    // assignment, hence results — is reproducible on any cluster layout.
-    // Only the one `transform` pass below ever touches the full corpus.
-    //
-    // Sizing the sample fraction needs the corpus row count, which the
-    // caller supplies as `totalRows` — a hint, like expectedNumItems on a
-    // Bloom filter. Callers at scale pass the count they invariably already
-    // have (a column-less parquet count is near-free: the scan reads row
-    // counts from footer metadata, never data pages). With NO hint the
-    // guard must still engage (r22, closing the r21 hole where a hint-less
-    // caller silently fitted the FULL corpus — 8 KMeans passes over every
-    // embedding at 100 TB): fall back to counting the corpus here, the same
-    // cheap pre-scan r9–r20 always paid. The hint's value is letting the
-    // caller supply a cheaper count (raw-scan metadata vs this plan), not
-    // skipping the safeguard.
-    val km = new KMeans().setK(nlist).setSeed(seed)
-      .setInitMode("random").setMaxIter(8)
-      .setFeaturesCol("_mlvec").setPredictionCol("_cell")
     val total = totalRows.getOrElse(corpus.count())
     val fitDf =
       if (total > fitSampleRows)
         graft.sampling.Sampling.deterministicSample(
-          withVec, col(idCol), fitSampleRows.toDouble / total)
-      else withVec
-    val model = km.fit(fitDf, ParamMap(km.solver -> "row"))
-    val assigned = model.transform(withVec).drop("_mlvec")
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("_cell", "_centroid")
+          corpus, col(idCol), fitSampleRows.toDouble / total)
+      else corpus
+    val centers = fitDf.select(col(idCol), col(vecCol)).repartition(1)
+      .sortWithinPartitions(idCol).select(col(vecCol)).as[Array[Float]]
+      .mapPartitions(rows => lloyd(rows.toArray, nlist, seed, iterations = 8).iterator)
+      .collect()
+    val cells = Seq(Tuple1(centers)).toDF("_cells")
 
-    val probeW = Window.partitionBy(col("query_id")).orderBy(col("cdist"))
+    val assigned = corpus.crossJoin(broadcast(cells))
+      .withColumn("_d", transform(col("_cells"), c => VectorOps.sqDist(col(vecCol), c)))
+      .withColumn("_cell", array_position(col("_d"), array_min(col("_d"))).cast("int") - 1)
+    val centroids = cells.select(posexplode(col("_cells")).as(Seq("_cell", "_centroid")))
+
+    val probeW = Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("_cell"))
     val probes = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .crossJoin(broadcast(centroids))
@@ -119,6 +103,27 @@ object Similarity {
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk").cast("long").as("rk"),
         col("neighbor_id"), col("cosine"))
+  }
+
+  /** `iterations` Lloyd steps from `k` distinct rows drawn with `seed`, in
+    * the arithmetic of VectorOps.sqDist; an empty cell keeps its centroid.
+    */
+  private def lloyd(points: Array[Array[Float]], k: Int, seed: Long,
+                    iterations: Int): Array[Array[Double]] = {
+    def sqDist(p: Array[Float], c: Array[Double]): Double = {
+      var acc = 0.0
+      var d = 0
+      while (d < p.length) { val x = p(d) - c(d); acc += x * x; d += 1 }
+      acc
+    }
+    var centers = new scala.util.Random(seed).shuffle(points.indices.toVector)
+      .take(k).map(points(_).map(_.toDouble)).toArray
+    for (_ <- 1 to iterations) {
+      val cells = points.groupBy(p => centers.indices.minBy(j => sqDist(p, centers(j))))
+      centers = centers.indices.map(j => cells.get(j).fold(centers(j))(ps =>
+        Array.tabulate(ps.head.length)(d => ps.map(_(d).toDouble).sum / ps.length))).toArray
+    }
+    centers
   }
 
   /** Exact cosine top-k neighbors for each row of `queries` against

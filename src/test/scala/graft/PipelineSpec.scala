@@ -63,7 +63,8 @@ class PipelineSpec extends SparkSpec {
     assert(articles > 0 && n >= articles)
     // footer boilerplate never survives the cleaner
     assert(out.filter(lower($"paragraph").contains("subscribe")).count() == 0)
-    // cache hit: same result without recompute
+    // cache hit: same result without recompute, and no job before the action
+    assert(jobsDuring(pipe.execute(spark, "nvidia earnings", maxArticles = 20)) == 0)
     val again = pipe.execute(spark, "nvidia earnings", maxArticles = 20)
     assert(again.count() == n)
   }

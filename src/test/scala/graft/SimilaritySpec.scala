@@ -93,6 +93,17 @@ class SimilaritySpec extends SparkSpec {
       "no-hint path must produce the hinted sampled-fit results")
   }
 
+  test("ivfTopK: the quantizer does not depend on the corpus partitioning") {
+    val corpus = (0 until 200).map { i =>
+      (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 17) % 23 - 11).toFloat))
+    }.toDF("vec_id", "embedding")
+    def topk(c: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfTopK(c.filter($"vec_id" < 10), c, "vec_id", "embedding",
+          k = 5, nlist = 8, nprobe = 2)
+        .collect.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(topk(corpus.coalesce(1)) == topk(corpus.repartition(7)))
+  }
+
   test("SqrtComparisonRule rewrites sqrt(vec_sqdist) radius filters exactly") {
     val df = Seq(
       (0L, Array(0.0f, 0.0f)), (1L, Array(3.0f, 4.0f)), (2L, Array(0.3f, 0.4f))
