@@ -38,11 +38,16 @@ object Sentiment {
     * dimension outgrows a broadcast) compares fixed-width hashes rather
     * than multi-KB strings. Same value-join semantics (md5 collisions at
     * 2⁻¹²⁸ are far below any float-noise tolerance elsewhere).
+    *
+    * The scored side is deduplicated on the key itself, one text per key,
+    * so each distinct text is still scored once and Catalyst knows the key
+    * is unique there: a consumer that does not read `outCol` drops the
+    * whole join (outer-join elimination).
     */
   def score(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    val scored = df.select(col(textCol)).distinct()
-      .select(md5(col(textCol)).as("__text_md5"),
-        lexiconClass(Text.tokens(col(textCol))).as(outCol))
+    val scored = df.select(md5(col(textCol)).as("__text_md5"), col(textCol))
+      .dropDuplicates("__text_md5")
+      .select(col("__text_md5"), lexiconClass(Text.tokens(col(textCol))).as(outCol))
     df.withColumn("__text_md5", md5(col(textCol)))
       .join(scored, Seq("__text_md5"), "left")
       .drop("__text_md5")

@@ -27,11 +27,16 @@ import graft.nlp.kernels.{Embedder, TfIdfEmbedder, LeadKSummarizer}
   * w.df   // materialized wide frame
   * }}}
   *
-  * Scale notes: embeddings are persisted after creation (reference eagerness
-  * is load-bearing — clustering scans, medoids and reduce-dim all reuse
-  * them, SURVEY.md §4.2.2); sentiment is distinct→score→join; summaries run
-  * only on medoid rows; topics/NER shuffle |vocabulary|-bounded aggregates,
-  * never the corpus.
+  * Scale notes: the chain caches two frames, the embedding frame
+  * (reference eagerness is load-bearing — the clustering scan and medoids
+  * reuse it, SURVEY.md §4.2.2) and the clustered frame; both live until the
+  * caller releases them (`unpersist` / `catalog.clearCache`). Every later
+  * stage attaches its column by a projection or by a left join on a key
+  * that is unique on the attached side, so Catalyst drops the attach when
+  * its column is not read: the PCA fit of [[reduceDimensionality]] reads
+  * only the cached clustered frame. Sentiment is distinct→score→join;
+  * summaries run only on medoid rows; topics/NER shuffle
+  * |vocabulary|-bounded aggregates, never the corpus.
   */
 final case class WordWizard(df: DataFrame, interest: String = "paragraph",
                             idCol: String = WordWizard.RowId,
@@ -110,20 +115,16 @@ final case class WordWizard(df: DataFrame, interest: String = "paragraph",
 
   /** B5: extractive summaries for medoid rows only, null elsewhere →
     * `{cluster}_medoids_summaries` (word_wizard.py:298-361: the generative
-    * kernel runs on ~2·k rows regardless of corpus size).
+    * kernel runs on ~2·k rows regardless of corpus size). A projection, not
+    * a join: `when` evaluates the summarizer on medoid rows only, and a
+    * consumer that does not read the column (the PCA fit) prunes it.
     */
   def summarizeMedoids(leadK: Int = 2): WordWizard = {
     val cl = findCluster
     val medoidCol = cl + MedoidSuffix
     requireCol(medoidCol, "clusterEmbeddings")
-    val outCol = medoidCol + SummarySuffix
-    val summaries = df.filter(col(medoidCol))
-      .select(col(idCol),
-        LeadKSummarizer.summarize(col(interest), leadK).as(outCol))
-    // summaries are bounded at clusters × nMedoids rows at any corpus size
-    // — broadcast so the attach never shuffles the corpus by id (r21; same
-    // reasoning as the q21 plan fix).
-    copy(df = df.join(broadcast(summaries), Seq(idCol), "left"))
+    copy(df = df.withColumn(medoidCol + SummarySuffix,
+      when(col(medoidCol), LeadKSummarizer.summarize(col(interest), leadK))))
   }
 
   /** B6/A3/W4: top-n weighted entity candidates per cluster, constant

@@ -1,8 +1,17 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.evaluation.ClusteringEvaluator
+import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.wizard.{Topics, Sentiment, Ner, Medoids}
+import graft.wizard.{Cluster, Topics, Sentiment, Ner, Medoids, WordWizard}
 import graft.nlp.text.Text
+import graft.queries.NlpQueries
 
 class WizardSpec extends SparkSpec {
   import spark.implicits._
@@ -86,4 +95,99 @@ class WizardSpec extends SparkSpec {
       Medoids.byPairwise(df, "id", "cl", "vec", 5, maxClusterSize = 3)
     }
   }
+
+  test("q18: sentiment equals scoring every row on its own") {
+    val dir = new Path(SparkEntry.entry(spark).inputFiles.head).getParent.toString
+    val got = NlpQueries.q18Sentiment(spark, dir).collect.toSeq
+    val want = Tables.balanced(spark, dir, "documents")
+      .select($"doc_id", Sentiment.lexiconClass(Text.tokens($"text")).as("sentiment"))
+      .orderBy($"doc_id").collect.toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
+  /** Three gaussian blobs in 4-d as `vec: array<float>`, plus a singleton
+    * outlier so one labeling has a one-point cluster.
+    */
+  private def blobs: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    val pts = (0 until 240).map { i =>
+      val c = i % 3
+      (i.toLong, Array.tabulate(4)(d => (if (d == c) 5.0 else 0.0) + rnd.nextGaussian()).map(_.toFloat))
+    } :+ ((240L, Array(40f, 40f, 40f, 40f)))
+    pts.toDF("id", "vec")
+  }
+
+  test("fused silhouette equals ClusteringEvaluator for every k; the scan picks the same k") {
+    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
+    val wizardEmb = WordWizard(WordWizardSpec.corpus(spark), "paragraph")
+      .createSentenceEmbeddings().df
+      .select(col("paragraph_sentence_embeddings").as("vec"))
+    for ((fixture, ks) <- Seq((blobs, 2 until 7), (wizardEmb, 2 until 6))) {
+      val withVec = fixture.withColumn("v", toVec($"vec"))
+      val models = ks.map { k =>
+        val km = new KMeans().setK(k).setSeed(42L).setFeaturesCol("v").setPredictionCol("p")
+        km.fit(withVec, ParamMap(km.solver -> "row"))
+      }
+      val want = models.map(m => new ClusteringEvaluator()
+        .setFeaturesCol("v").setPredictionCol("p").evaluate(m.transform(withVec)))
+      val got = Cluster.silhouettes(withVec, "v", models)
+      got.zip(want).zip(ks).foreach { case ((g, w), k) =>
+        assert(math.abs(g - w) <= 1e-9, s"k=$k fused $g evaluator $w")
+      }
+      val bestK = want.zip(ks).maxBy { case (s, k) => (s, -k) }._2
+      assert(Cluster.kmeansSilhouette(fixture, "vec", "cl", ks.head, ks.last + 1)._1 == bestK)
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("a failed candidate fit fails the scan, starts no later fit and leaves no cache") {
+    val sc = spark.sparkContext
+    // while `FailingInput.on`, a null vector fails every fit at its first
+    // job; the input is left uncached, so the scan owns (persists and
+    // releases) it
+    val nullAt17 = udf((id: Long, v: Seq[Float]) => if (FailingInput.on && id == 17L) null else v)
+    val input = blobs.withColumn("vec", nullAt17($"id", $"vec"))
+    // every job start, as (job id, description)
+    val started = new ConcurrentLinkedQueue[(Int, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.jobId ->
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(): Unit = {
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try for (width <- Seq(1, 3)) {
+      started.clear()
+      val before = sc.getPersistentRDDs.keySet
+      marker()
+      intercept[Exception](Cluster.kmeansSilhouette(input, "vec", "cl",
+        kMin = 2, kMax = 5, poolWidth = width))
+      marker()
+      jobsDuring(()) // flushes the listener bus: `started` is complete
+      assert(sc.getPersistentRDDs.keySet == before,
+        s"left behind: ${(sc.getPersistentRDDs.keySet -- before).map(sc.getPersistentRDDs)}")
+      assert(input.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      if (width == 1) {
+        // one fit at a time: k=2 fails; k=3 and k=4 start after it and
+        // submit nothing, not even a job the scheduler would reject (such
+        // a job takes an id but never starts)
+        val jobs = started.toArray(Array.empty[(Int, String)]).toSeq
+        val Seq(from, to) = jobs.collect { case (id, "marker") => id }
+        val fits = jobs.collect { case (_, d) if d.startsWith("silhouette fit") => d }
+        assert(fits.toSet == Set("silhouette fit k=2"))
+        assert(jobs.map(_._1).filter(id => id > from && id < to).sorted == (from + 1 until to))
+      }
+    } finally sc.removeSparkListener(listener)
+    // the failed scans cancelled their groups' future jobs; a new scan of
+    // the same frame is its own group, so they do not cancel it
+    FailingInput.on = false
+    try assert(Cluster.kmeansSilhouette(input, "vec", "cl", kMin = 2, kMax = 4)._2.count() == 241)
+    finally FailingInput.on = true
+  }
 }
+
+/** Switch for the failing-scan spec's input (tasks run in this JVM). */
+object FailingInput { @volatile var on = true }

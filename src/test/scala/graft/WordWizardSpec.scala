@@ -1,19 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.nlp.kernels.LeadKSummarizer
 import graft.wizard.WordWizard
 
 class WordWizardSpec extends SparkSpec {
   import spark.implicits._
 
-  // two separable "topics" so KMeans(k=2) is stable
-  private def corpus = {
-    val a = (0 until 12).map(i =>
-      (s"spark shuffle partition executor task stage job " * 3) + s"run$i")
-    val b = (0 until 12).map(i =>
-      (s"recipe butter flour sugar oven bake cake " * 3) + s"dish$i")
-    (a ++ b).toDF("paragraph")
-  }
+  private def corpus = WordWizardSpec.corpus(spark)
 
   test("full chain produces the reference's suffix-column schema") {
     val w = WordWizard(corpus, "paragraph")
@@ -105,5 +102,61 @@ class WordWizardSpec extends SparkSpec {
     val cl = "paragraph_sentence_embeddings_clusters"
     val ks = w.df.select(col(cl)).distinct().count()
     assert(ks >= 2 && ks <= 4)
+  }
+
+  private val emb = "paragraph_sentence_embeddings"
+
+  test("attach stages are pruned: PCA fits on the cached clustered frame alone") {
+    val w2 = WordWizard(corpus, "paragraph").createSentenceEmbeddings()
+      .clusterEmbeddings(k = Some(2))
+    val w6 = w2.entityRecognition(minLen = 4).summarizeMedoids().findSentiment()
+      .topicModelling(nWords = 5)
+    val joins = w6.df.select(col(emb)).queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.isEmpty, joins.mkString("\n"))
+    w2.df.count() // the clustered frame is materialized
+    assert(jobsDuring(w6.reduceDimensionality()) <= 6)
+    spark.catalog.clearCache()
+  }
+
+  test("summarizeMedoids: a summary on medoid rows, null elsewhere, as the join gave") {
+    val w = WordWizard(corpus, "paragraph").createSentenceEmbeddings()
+      .clusterEmbeddings(k = Some(2))
+    val medoid = s"${emb}_clusters_medoids"
+    val out = s"${medoid}_summaries"
+    val byJoin = w.df.join(w.df.filter(col(medoid)).select(col(WordWizard.RowId),
+        LeadKSummarizer.summarize(col("paragraph"), 2).as(out)), Seq(WordWizard.RowId), "left")
+      .select(WordWizard.RowId, out)
+    val got = w.summarizeMedoids().df.select(WordWizard.RowId, out)
+    assert(got.collect.toSet == byJoin.collect.toSet)
+    assert(got.filter(col(out).isNotNull).count() == 4)
+    spark.catalog.clearCache()
+  }
+
+  test("a default chain keeps exactly its two documented caches until released") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    val w1 = WordWizard(corpus, "paragraph").createSentenceEmbeddings()
+    val w2 = w1.clusterEmbeddings()
+    val w = w2.entityRecognition().summarizeMedoids().findSentiment()
+      .topicModelling().reduceDimensionality()
+    w.df.write.format("noop").mode("overwrite").save()
+    val left = sc.getPersistentRDDs -- before
+    assert(left.size == 2, s"persisted: ${left.values.mkString(", ")}")
+    assert(Seq(w1.df, w2.df).forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK))
+    spark.catalog.clearCache()
+    assert((sc.getPersistentRDDs -- before).isEmpty)
+  }
+}
+
+object WordWizardSpec {
+  /** Two separable "topics" so KMeans(k=2) is stable. */
+  def corpus(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val a = (0 until 12).map(i =>
+      (s"spark shuffle partition executor task stage job " * 3) + s"run$i")
+    val b = (0 until 12).map(i =>
+      (s"recipe butter flour sugar oven bake cake " * 3) + s"dish$i")
+    (a ++ b).toDF("paragraph")
   }
 }
