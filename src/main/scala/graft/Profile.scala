@@ -146,25 +146,6 @@ object Profile {
     }
     spark.catalog.clearCache()
 
-    // ---- silhouette sweep: pool=1 vs pool=3 (r22, VERDICT #7 evidence) --
-    // Same 13-k scan the wizard chain runs; the only variable is how many
-    // candidate fits are in flight (guide §2.6 job overlap).
-    locally {
-      import graft.wizard.Cluster
-      val emb = Tables(spark, sfDir, "embeddings")
-      for (w <- Seq(1, 3)) {
-        t(s"kmeansSilhouette 13-k sweep poolWidth=$w") {
-          val (bestK, labeled) =
-            Cluster.kmeansSilhouette(emb, "embedding", "cl",
-              kMin = 2, kMax = 15, seed = 42L, poolWidth = w)
-          val n = labeled.count()
-          println(s"[profile]   bestK=$bestK")
-          n
-        }
-      }
-    }
-    spark.catalog.clearCache()
-
     // ---- plan audit: greppable assertions on the physical plans --------
     def audit(name: String, df: org.apache.spark.sql.DataFrame,
               wants: Seq[String]): Unit = {

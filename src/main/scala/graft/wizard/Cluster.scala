@@ -1,23 +1,31 @@
 package graft.wizard
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.clustering.{BisectingKMeans, KMeans, KMeansModel}
-import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.clustering.BisectingKMeans
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.linalg.{Vector => MlVector, Vectors}
+import org.apache.spark.mllib.clustering.{KMeansModel, GraftKMeansBridge => KM}
+import org.apache.spark.mllib.linalg.{Vector => OldVector, Vectors => OldVectors}
 import org.apache.spark.storage.StorageLevel
 
 /** Clustering + dimensionality reduction (reference word_wizard.py:233-296,
   * 513-559, 675-717 — operators B3/B7).
   *
-  * MLlib KMeans with a fixed seed replaces sklearn KMeans; the silhouette
-  * scan over candidate k is the reference's `_k_search` (word_wizard.py:
-  * 675-717) with the interactive elbow input dropped (not reproducible —
-  * SURVEY.md §2.10 B3). Every candidate fit reads the one cached input —
-  * the reference refits on the same matrix 13 times; here that costs one
-  * cache materialization, k fits over executors and one fused silhouette
-  * scoring of all k.
+  * k-means with a fixed seed replaces sklearn KMeans: MLlib's row-solver
+  * algorithm (k-means|| init, Lloyd iterations), run through MLlib's own
+  * kernels but driven here so that every candidate k of the silhouette scan
+  * advances in lockstep — one single-stage job per algorithm step serves
+  * every k still running. The scan is the reference's `_k_search`
+  * (word_wizard.py:675-717) with the interactive elbow input dropped (not
+  * reproducible — SURVEY.md §2.10 B3). The reference refits on the same
+  * matrix 13 times; here that costs one vector cache owned by the scan,
+  * ≤ 29 jobs for all k together and one fused silhouette scoring of all k.
   *
   * PCA stands in for UMAP (documented deviation, SURVEY.md §7.3): UMAP is
   * stochastic and has no Spark-native equivalent; downstream consumers need
@@ -29,24 +37,199 @@ object Cluster {
     Vectors.dense(a.map(_.toDouble).toArray))
   private def toArr = udf((v: MlVector) => v.toArray.map(_.toFloat))
 
-  /** One KMeans fit. solver=row: the 4.1 block solver crashes with an
-    * ArrayIndexOutOfBounds when kmeans|| init finds fewer distinct centers
-    * than k (near-duplicate-heavy corpora hit this); the row solver pads
-    * duplicate centers and proceeds.
+  // MLlib KMeans defaults (ml.clustering.KMeans): k-means|| with 2 steps,
+  // ≤ 20 Lloyd iterations, convergence tolerance 1e-4; local k-means++
+  // over the weighted candidates runs 30 iterations from seed 0
+  private val InitSteps = 2
+  private val MaxIterations = 20
+  private val Epsilon = 1e-4
+  private val LocalIterations = 30
+
+  /** KMeans labels for `vecCol` (array<float>) as `outCol: int`: the
+    * lockstep fit ([[fitKMeans]]) with one k.
     */
-  private def fitKMeans(withVec: DataFrame, tmp: String, outCol: String,
-                        k: Int, seed: Long): KMeansModel = {
-    val km = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol(tmp).setPredictionCol(outCol)
-    km.fit(withVec, ParamMap(km.solver -> "row"))
+  def kmeans(df: DataFrame, vecCol: String, outCol: String, k: Int,
+             seed: Long = 42L): DataFrame =
+    label(df, vecCol, outCol, withPoints(df, vecCol)(fitKMeans(_, Seq(k), seed)).head)
+
+  /** `df` plus `outCol: int`, each row's nearest center of `model` (its
+    * `predict`, the labels `ml.clustering.KMeansModel.transform` gives).
+    */
+  private def label(df: DataFrame, vecCol: String, outCol: String,
+                    model: KMeansModel): DataFrame = {
+    val predict = udf((a: Seq[Float]) => model.predict(toPoint(a)))
+    df.withColumn(outCol, predict(col(vecCol)))
   }
 
-  /** KMeans labels for `vecCol` (array<float>) as `outCol: int`. */
-  def kmeans(df: DataFrame, vecCol: String, outCol: String, k: Int,
-             seed: Long = 42L): DataFrame = {
-    val tmp = vecCol + "_mlvec"
-    val withVec = df.withColumn(tmp, toVec(col(vecCol)))
-    fitKMeans(withVec, tmp, outCol, k, seed).transform(withVec).drop(tmp)
+  private def toPoint(a: Seq[Float]): OldVector = OldVectors.dense(a.map(_.toDouble).toArray)
+
+  /** `f` over the unit-weight points of `vecCol`, cached for `f` alone:
+    * the row-solver instances of `ml.clustering.KMeans` (same partitions,
+    * same row order, same norms), released however `f` ends. The caller's
+    * frame is never persisted or unpersisted here.
+    */
+  private[graft] def withPoints[T](df: DataFrame, vecCol: String)(f: RDD[KM.Point] => T): T = {
+    val points = df.select(col(vecCol)).rdd
+      .map(r => KM.point(toPoint(r.getSeq[Float](0))))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try f(points) finally points.unpersist()
+  }
+
+  /** Broadcasts of one fit, destroyed together (a failed fit included). */
+  private final class Shared(sc: SparkContext) {
+    private val live = ArrayBuffer.empty[Broadcast[_]]
+    def apply[T: ClassTag](v: T): Broadcast[T] = { val b = sc.broadcast(v); live += b; b }
+    def destroyAll(): Unit = { live.foreach(_.destroy()); live.clear() }
+  }
+
+  /** MLlib's k-means (`ml.clustering.KMeans().setK(k).setSeed(seed)` with
+    * the row solver) for every k of `ks`, in lockstep: each step below is
+    * one single-stage job that serves every k still running, and computes
+    * what MLlib computes for that k.
+    *
+    *  1. First center: MLlib seeds k-means|| with `XORShiftRandom(seed)
+    *     .nextInt()`, which does not depend on k, so one `takeSample` gives
+    *     every k the same first center.
+    *  1. k-means|| steps: one job sums each k's point costs (the running
+    *     min of `pointCost` over the centers each step added), one job draws
+    *     MLlib's per-partition `XORShiftRandom(seed ^ (step << 16) ^ index)`
+    *     once per point and keeps the point for every k whose threshold
+    *     `2·cost·k/sumCosts` it beats. Costs are recomputed from the added
+    *     centers in each job rather than cached.
+    *  1. Candidates: deduplicated per k; a k with more than k distinct
+    *     candidates weights them by closest-candidate counts (one job for
+    *     all such k) and picks k by MLlib's local k-means++. A k with fewer
+    *     keeps them all, so its model has fewer than k centers, as MLlib's.
+    *  1. Lloyd: one job per iteration assigns every point for every k not
+    *     yet converged (MLlib's `findClosest` and `updateClusterSum`), and
+    *     the per-partition (Σ, weight) of each cluster are merged on the
+    *     driver in partition order — the merge order of MLlib's local-mode
+    *     `reduceByKey`. A k stops when every moved center is within
+    *     `Epsilon` or after `MaxIterations`.
+    *
+    * Costs are summed in partition order where MLlib sums in task
+    * completion order; they only set thresholds and `trainingCost`.
+    */
+  private[graft] def fitKMeans(points: RDD[KM.Point], ks: Seq[Int],
+                               seed: Long): Seq[KMeansModel] = {
+    val n = ks.length
+    val kArr = ks.toArray
+    val share = new Shared(points.sparkContext)
+    try {
+      // ---- k-means|| ------------------------------------------------------
+      val initSeed = KM.random(seed).nextInt()
+      val sample = points.takeSample(withReplacement = false, 1, initSeed)
+      require(sample.nonEmpty, s"No samples available from $points")
+      val first = KM.toDense(sample.head)
+      // added(s)(i): the centers step s added for ks(i) (step 0: the first)
+      val added = ArrayBuffer(Array.fill(n)(Array(first)))
+      for (step <- 0 until InitSteps) {
+        val bAdded = share(added.toArray)
+        val sumCosts = points.mapPartitions { it =>
+          val sum = new Array[Double](n)
+          it.foreach { p =>
+            val c = initCosts(bAdded.value, p)
+            for (i <- 0 until n) sum(i) += c(i)
+          }
+          Iterator.single(sum)
+        }.collect().foldLeft(new Array[Double](n)) { (a, b) =>
+          for (i <- 0 until n) a(i) += b(i)
+          a
+        }
+        val chosen = points.mapPartitionsWithIndex { (index, it) =>
+          val rand = KM.random(initSeed ^ (step << 16) ^ index)
+          val picked = Array.fill(n)(ArrayBuffer.empty[KM.Point])
+          it.foreach { p =>
+            val c = initCosts(bAdded.value, p)
+            val r = rand.nextDouble()
+            for (i <- 0 until n) if (r < 2.0 * c(i) * kArr(i) / sumCosts(i)) picked(i) += p
+          }
+          Iterator.single(picked.map(_.toArray))
+        }.collect()
+        added += Array.tabulate(n)(i => chosen.flatMap(_(i)).map(KM.toDense))
+        share.destroyAll()
+      }
+      val candidates = Array.tabulate(n)(i =>
+        added.flatMap(_(i)).map(KM.vector).distinct.map(KM.point).toArray)
+      val weighted = (0 until n).filter(i => candidates(i).length > kArr(i)).toArray
+      val counts = if (weighted.isEmpty) Array.empty[Array[Long]] else {
+        val bCands = share(weighted.map(candidates))
+        val perPartition = points.mapPartitions { it =>
+          val cands = bCands.value
+          val hits = cands.map(c => new Array[Long](c.length))
+          it.foreach(p => cands.indices.foreach(w => hits(w)(KM.findClosest(cands(w), p)._1) += 1))
+          Iterator.single(hits)
+        }.collect()
+        share.destroyAll()
+        weighted.indices.map(w => perPartition.map(_(w)).transpose.map(_.sum)).toArray
+      }
+      val centers = Array.tabulate(n) { i =>
+        val w = weighted.indexOf(i)
+        if (w < 0) candidates(i)
+        else KM.kMeansPlusPlus(0, candidates(i), counts(w).map(_.toDouble), kArr(i), LocalIterations)
+      }
+      // ---- Lloyd ------------------------------------------------------------
+      val iterations = new Array[Int](n)
+      val costs = new Array[Double](n)
+      var running = (0 until n).toArray
+      while (running.nonEmpty) {
+        val bCenters = share(running.map(centers))
+        val bStats = share(running.map { i =>
+          if (KM.shouldComputeStatistics(centers(i).length)) Some(KM.computeStatistics(centers(i)))
+          else None
+        })
+        // per partition, per running k: Σ and weight of each cluster, cost
+        val parts = points.mapPartitions { it =>
+          val cs = bCenters.value
+          val stats = bStats.value
+          val sums = cs.map(c => Array.fill(c.length)(OldVectors.zeros(KM.vector(c.head).size)))
+          val weights = cs.map(c => new Array[Double](c.length))
+          val cost = new Array[Double](cs.length)
+          it.foreach { p =>
+            for (r <- cs.indices) {
+              val (best, d) = KM.findClosest(cs(r), stats(r), p)
+              cost(r) += d
+              KM.updateClusterSum(p, sums(r)(best))
+              weights(r)(best) += 1.0
+            }
+          }
+          Iterator.single((sums, weights, cost))
+        }.collect()
+        share.destroyAll()
+        val converged = running.indices.map { r =>
+          val i = running(r)
+          var done = true
+          for (j <- centers(i).indices) {
+            val hits = parts.filter(_._2(r)(j) > 0)
+            if (hits.nonEmpty) {
+              val sum = hits.head._1(r)(j)
+              hits.tail.foreach(h => KM.axpy(1.0, h._1(r)(j), sum))
+              val updated = KM.centroid(sum, hits.map(_._2(r)(j)).reduce(_ + _))
+              if (done && !KM.isCenterConverged(centers(i)(j), updated, Epsilon)) done = false
+              centers(i)(j) = updated
+            }
+          }
+          costs(i) = parts.map(_._3(r)).sum
+          iterations(i) += 1
+          done
+        }
+        running = running.indices.collect {
+          case r if !converged(r) && iterations(running(r)) < MaxIterations => running(r)
+        }.toArray
+      }
+      (0 until n).map(i => new KMeansModel(centers(i).map(KM.vector), "euclidean",
+        costs(i), iterations(i)))
+    } finally share.destroyAll()
+  }
+
+  /** Each k's k-means|| cost of `p` once the steps of `added` have run:
+    * MLlib's running min(pointCost(centers the step added), previous cost),
+    * from +∞.
+    */
+  private def initCosts(added: Array[Array[Array[KM.Point]]], p: KM.Point): Array[Double] = {
+    val c = Array.fill(added.head.length)(Double.PositiveInfinity)
+    for (step <- added; i <- c.indices) c(i) = math.min(KM.pointCost(step(i), p), c(i))
+    c
   }
 
   /** Density-flavored alternative (reference `algorithm="hdbscan"`,
@@ -68,97 +251,40 @@ object Cluster {
     * (reference scans k∈[2,15) then floors at k≥5; pass the floor as kMin).
     * Returns (bestK, labeled df).
     *
-    * Caching: the input is materialized once, before the concurrent fits
-    * could race to fill it. A frame the caller cached (the wizard's
-    * embedding frame) is used as it is and never unpersisted here; an
-    * uncached one is persisted for the scan and unpersisted before return.
-    * Each fit gets the UNCACHED vector projection, so MLlib's `KMeans.fit`
-    * takes its own persistence path: a deserialized instance RDD, cached
-    * for that fit and released when it ends. Partitioning and row order are
-    * those of the input, so seeds, centers and labels are too.
-    *
-    * Candidate fits are independent jobs over the same cached input, so
-    * they run from a small driver thread pool (guide-standard overlap): the
-    * tail tasks of one k's fit no longer leave the cluster idle while the
-    * next k waits. `poolWidth` fits in flight (3 by default) is enough to
-    * fill stragglers without thrashing executors; each (k, seed) fit is
-    * deterministic, so completion order cannot change which model wins.
-    * All candidates are then scored together by [[silhouettes]].
-    *
-    * Failure path: the first failed fit cancels the scan's job group,
-    * future jobs included, so in-flight sibling fits stop and a fit that
-    * starts after the failure submits no job. The group is a per-call
-    * token, so two scans of one frame never cancel each other. MLlib
-    * releases a fit's instance cache only when the fit succeeds, so once
-    * every fit has stopped the scan unpersists what its fits left (the RDDs
-    * created under its call site) and rethrows the first failure.
+    * One lockstep fit ([[fitKMeans]]) runs every candidate k, then
+    * [[silhouettes]] scores them all together; both read one vector cache
+    * that the scan owns and releases before it returns, however it ends
+    * ([[withPoints]]). Partitioning and row order are those of the input,
+    * so seeds, centers and labels are MLlib's. A failure is an ordinary
+    * exception: no job of the scan starts after the failing one, and the
+    * cache and the fit's broadcasts are released on the way out.
     */
   def kmeansSilhouette(df: DataFrame, vecCol: String, outCol: String,
                        kMin: Int = 2, kMax: Int = 15,
-                       seed: Long = 42L, poolWidth: Int = 3): (Int, DataFrame) = {
+                       seed: Long = 42L): (Int, DataFrame) = {
     require(kMax > kMin && kMin >= 2, s"need 2 <= kMin < kMax, got [$kMin,$kMax)")
-    require(poolWidth >= 1, s"poolWidth=$poolWidth must be >= 1")
-    val sc = df.sparkSession.sparkContext
-    val owned = df.storageLevel == StorageLevel.NONE
-    if (owned) df.persist(StorageLevel.MEMORY_AND_DISK)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolWidth)
-    try {
-      df.count() // materialize ONCE before concurrent fits race to fill it
-      val tmp = vecCol + "_mlvec"
-      val withVec = df.withColumn(tmp, toVec(col(vecCol)))
-      val group = s"kmeansSilhouette[$kMin,$kMax)#${scans.incrementAndGet()}"
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fits = (kMin until kMax).map { k =>
-        scala.concurrent.Future {
-          if (failure.get != null)
-            throw new java.util.concurrent.CancellationException(s"$group: k=$k not started")
-          // job group and call site are thread-local: set them in the pool
-          // thread so a failure can cancel every sibling fit's jobs, and
-          // the RDDs this fit persists can be found afterwards
-          sc.setJobGroup(group, s"silhouette fit k=$k", interruptOnCancel = true)
-          sc.setCallSite(group)
-          try k -> fitKMeans(withVec, tmp, outCol, k, seed)
-          catch { case e: Throwable =>
-            if (failure.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
-            throw e
-          }
-        }
-      }
-      val done = fits.map(f => scala.util.Try(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-      Option(failure.get).foreach { e =>
-        sc.getPersistentRDDs.values.filter(GraftSqlBridge.creationSite(_) == group)
-          .foreach(_.unpersist(blocking = false))
-        throw e
-      }
-      val models = done.map(_.get)
-      val scores = silhouettes(withVec, tmp, models.map(_._2))
-      val ((bestK, bestM), _) = models.zip(scores).maxBy { case ((k, _), s) => (s, -k) }
-      (bestK, bestM.transform(withVec).drop(tmp))
-    } finally {
-      pool.shutdownNow()
-      if (owned) df.unpersist()
+    val ks = kMin until kMax
+    val (models, scores) = withPoints(df, vecCol) { points =>
+      val models = fitKMeans(points, ks, seed)
+      (models, silhouettes(points.map(KM.vector), models))
     }
+    val ((bestK, best), _) = ks.zip(models).zip(scores).maxBy { case ((k, _), s) => (s, -k) }
+    (bestK, label(df, vecCol, outCol, best))
   }
 
-  private val scans = new java.util.concurrent.atomic.AtomicLong
-
-  /** Mean silhouette of each model's labeling of `featuresCol` (ml Vector),
+  /** Mean silhouette of each model's labeling of `points`,
     * in two fused passes over all models instead of one
     * `ClusteringEvaluator` per model: the same squared-Euclidean silhouette
     * with unit weights. Pass one aggregates Σx, Σ‖x‖² and n per
     * (model, cluster); pass two scores every point against those stats and
     * sums the coefficients per model. Labels come from each model's own
-    * `predict`, exactly as `transform` gives them.
+    * `predict`.
     */
-  private[graft] def silhouettes(points: DataFrame, featuresCol: String,
+  private[graft] def silhouettes(points: RDD[OldVector],
                                  models: Seq[KMeansModel]): Seq[Double] = {
     val ms = models.toArray
-    val labeled = points.select(col(featuresCol)).rdd.map { r =>
-      val v = r.getAs[MlVector](0)
-      (v.toArray, math.pow(Vectors.norm(v, 2.0), 2.0), ms.map(_.predict(v)))
+    val labeled = points.map { v =>
+      (v.toArray, math.pow(Vectors.norm(v.asML, 2.0), 2.0), ms.map(_.predict(v)))
     }
     // one slot per (model, cluster), laid out as Σx (dim values), Σ‖x‖², n
     val offs = ms.scanLeft(0)(_ + _.clusterCenters.length) // first slot per model

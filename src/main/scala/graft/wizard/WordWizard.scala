@@ -30,7 +30,11 @@ import graft.nlp.kernels.{Embedder, TfIdfEmbedder, LeadKSummarizer}
   * Scale notes: the chain caches two frames, the embedding frame
   * (reference eagerness is load-bearing — the clustering scan and medoids
   * reuse it, SURVEY.md §4.2.2) and the clustered frame; both live until the
-  * caller releases them (`unpersist` / `catalog.clearCache`). Every later
+  * caller releases them (`unpersist` / `catalog.clearCache`). The k-means
+  * fit reads the embedding frame once into a vector cache of its own, fits
+  * every candidate k in lockstep over it (one single-stage job per
+  * algorithm step, no driver threads) and releases it before the stage
+  * returns, so the chain's caches stay those two. Every later
   * stage attaches its column by a projection or by a left join on a key
   * that is unique on the attached side, so Catalyst drops the attach when
   * its column is not read: the PCA fit of [[reduceDimensionality]] reads

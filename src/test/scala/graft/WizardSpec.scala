@@ -4,9 +4,11 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.linalg.{Vector => MlVector, Vectors}
 import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.mllib.clustering.{KMeansModel => OldKMeansModel}
+import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.wizard.{Cluster, Topics, Sentiment, Ner, Medoids, WordWizard}
@@ -117,20 +119,32 @@ class WizardSpec extends SparkSpec {
     pts.toDF("id", "vec")
   }
 
+  /** Each fused model's labels, as `ml.clustering.KMeansModel.transform`
+    * gives them (the ml model's `predict` is the mllib model's).
+    */
+  private def fusedLabels(withVec: DataFrame, m: OldKMeansModel): DataFrame = {
+    val predict = udf((v: MlVector) => m.predict(OldVectors.fromML(v)))
+    withVec.withColumn("p", predict($"v"))
+  }
+
+  private def fused(fixture: DataFrame, ks: Seq[Int]): Seq[OldKMeansModel] =
+    Cluster.withPoints(fixture, "vec")(Cluster.fitKMeans(_, ks, 42L))
+
+  private def wizardEmb: DataFrame = WordWizard(WordWizardSpec.corpus(spark), "paragraph")
+    .createSentenceEmbeddings().df
+    .select(col("paragraph_sentence_embeddings").as("vec"))
+
+  private val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
+
   test("fused silhouette equals ClusteringEvaluator for every k; the scan picks the same k") {
-    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
-    val wizardEmb = WordWizard(WordWizardSpec.corpus(spark), "paragraph")
-      .createSentenceEmbeddings().df
-      .select(col("paragraph_sentence_embeddings").as("vec"))
     for ((fixture, ks) <- Seq((blobs, 2 until 7), (wizardEmb, 2 until 6))) {
       val withVec = fixture.withColumn("v", toVec($"vec"))
-      val models = ks.map { k =>
-        val km = new KMeans().setK(k).setSeed(42L).setFeaturesCol("v").setPredictionCol("p")
-        km.fit(withVec, ParamMap(km.solver -> "row"))
-      }
+      val models = fused(fixture, ks)
       val want = models.map(m => new ClusteringEvaluator()
-        .setFeaturesCol("v").setPredictionCol("p").evaluate(m.transform(withVec)))
-      val got = Cluster.silhouettes(withVec, "v", models)
+        .setFeaturesCol("v").setPredictionCol("p").evaluate(fusedLabels(withVec, m)))
+      val vectors = fixture.select($"vec").as[Seq[Float]].rdd
+        .map(a => OldVectors.dense(a.map(_.toDouble).toArray))
+      val got = Cluster.silhouettes(vectors, models)
       got.zip(want).zip(ks).foreach { case ((g, w), k) =>
         assert(math.abs(g - w) <= 1e-9, s"k=$k fused $g evaluator $w")
       }
@@ -140,49 +154,75 @@ class WizardSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("the lockstep fit is MLlib's row-solver KMeans for every k: labels, centers, iterations") {
+    // 3 distinct points, 20 copies each: k-means|| finds 3 distinct
+    // candidates, so MLlib returns 3 centers for k = 4 and 5
+    val nearDup = (0 until 60).map(i => Array.tabulate(4)(d => if (d == i % 3) 1f else 0f))
+      .toDF("vec")
+    for ((fixture, ks) <- Seq((blobs, 2 until 7), (wizardEmb, 2 until 6), (nearDup, 2 until 6))) {
+      val withVec = fixture.withColumn("v", toVec($"vec"))
+      fused(fixture, ks).zip(ks).foreach { case (got, k) =>
+        val km = new KMeans().setK(k).setSeed(42L).setFeaturesCol("v").setPredictionCol("p")
+        val want = km.fit(withVec, ParamMap(km.solver -> "row"))
+        val labels = (df: DataFrame) => df.select($"p").as[Int].collect().toSeq
+        assert(labels(fusedLabels(withVec, got)) == labels(want.transform(withVec)), s"k=$k")
+        assert(got.clusterCenters.length == want.clusterCenters.length, s"k=$k")
+        got.clusterCenters.zip(want.clusterCenters).foreach { case (g, w) =>
+          g.toArray.zip(w.toArray).foreach { case (a, b) => assert(math.abs(a - b) <= 1e-9, s"k=$k") }
+        }
+        // numIter is private[spark] on the mllib model
+        val iterations = got.getClass.getMethod("numIter").invoke(got)
+        assert(iterations == want.summary.numIter, s"k=$k")
+      }
+    }
+    assert(fused(nearDup, Seq(5)).head.clusterCenters.length == 3)
+    // the fixed-k entry point is the same fit with one k
+    val km = new KMeans().setK(3).setSeed(42L).setFeaturesCol("v").setPredictionCol("cl")
+    val withVec = blobs.withColumn("v", toVec($"vec"))
+    assert(Cluster.kmeans(blobs, "vec", "cl", 3).select($"cl").as[Int].collect().toSeq ==
+      km.fit(withVec, ParamMap(km.solver -> "row")).transform(withVec)
+        .select($"cl").as[Int].collect().toSeq)
+    spark.catalog.clearCache()
+  }
+
   test("a failed candidate fit fails the scan, starts no later fit and leaves no cache") {
     val sc = spark.sparkContext
-    // while `FailingInput.on`, a null vector fails every fit at its first
-    // job; the input is left uncached, so the scan owns (persists and
-    // releases) it
+    // while `FailingInput.on`, a null vector fails the scan at its first
+    // job; the input is left uncached, and the scan must leave it so
     val nullAt17 = udf((id: Long, v: Seq[Float]) => if (FailingInput.on && id == 17L) null else v)
     val input = blobs.withColumn("vec", nullAt17($"id", $"vec"))
-    // every job start, as (job id, description)
+    // every job start, as (job id, description), and every failed job end
     val started = new ConcurrentLinkedQueue[(Int, String)]
+    val failed = new ConcurrentLinkedQueue[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.jobId ->
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobResult != JobSucceeded) failed.add(e.jobId)
     }
     def marker(): Unit = {
       sc.setJobDescription("marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
     }
     sc.addSparkListener(listener)
-    try for (width <- Seq(1, 3)) {
-      started.clear()
+    try {
       val before = sc.getPersistentRDDs.keySet
       marker()
-      intercept[Exception](Cluster.kmeansSilhouette(input, "vec", "cl",
-        kMin = 2, kMax = 5, poolWidth = width))
+      intercept[Exception](Cluster.kmeansSilhouette(input, "vec", "cl", kMin = 2, kMax = 5))
       marker()
-      jobsDuring(()) // flushes the listener bus: `started` is complete
+      jobsDuring(()) // flushes the listener bus: `started` and `failed` are complete
       assert(sc.getPersistentRDDs.keySet == before,
         s"left behind: ${(sc.getPersistentRDDs.keySet -- before).map(sc.getPersistentRDDs)}")
       assert(input.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      if (width == 1) {
-        // one fit at a time: k=2 fails; k=3 and k=4 start after it and
-        // submit nothing, not even a job the scheduler would reject (such
-        // a job takes an id but never starts)
-        val jobs = started.toArray(Array.empty[(Int, String)]).toSeq
-        val Seq(from, to) = jobs.collect { case (id, "marker") => id }
-        val fits = jobs.collect { case (_, d) if d.startsWith("silhouette fit") => d }
-        assert(fits.toSet == Set("silhouette fit k=2"))
-        assert(jobs.map(_._1).filter(id => id > from && id < to).sorted == (from + 1 until to))
-      }
+      // every job id taken between the markers started (the scheduler
+      // rejected none), and the last of them is the one that failed
+      val jobs = started.toArray(Array.empty[(Int, String)]).toSeq
+      val Seq(from, to) = jobs.collect { case (id, "marker") => id }
+      val scan = jobs.map(_._1).filter(id => id > from && id < to).sorted
+      assert(scan.nonEmpty && scan == (from + 1 until to))
+      assert(failed.toArray.toSeq.map(_.asInstanceOf[Int]).filter(scan.contains) == Seq(scan.last))
     } finally sc.removeSparkListener(listener)
-    // the failed scans cancelled their groups' future jobs; a new scan of
-    // the same frame is its own group, so they do not cancel it
     FailingInput.on = false
     try assert(Cluster.kmeansSilhouette(input, "vec", "cl", kMin = 2, kMax = 4)._2.count() == 241)
     finally FailingInput.on = true
