@@ -1,25 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: write PLANS.md — finalized (post-AQE) physical plans of the
-  * headline queries, the artifact behind the scale claims in README.md.
-  * `runMain graft.PlanReport [sfDir] [outFile]`.
+/** Dev tool: finalized (post-AQE) physical plans.
+  * `runMain graft.PlanReport [sfDir] [outFile] [q...]`. With no query
+  * names it writes PLANS.md: the headline queries' plans with notes, the
+  * artifact behind the scale claims in README.md. With names it dumps
+  * those queries' plans instead, so plan regressions (lost pushdown,
+  * surprise shuffles, missing broadcasts, codegen fallbacks) are visible.
   */
 object PlanReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val only = args.drop(2).toSeq
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val picks: Seq[(String, String)] = Seq(
@@ -36,11 +29,13 @@ object PlanReport {
       "q44_pack_sequences" -> ("distributed prefix sum (range partition + " +
         "offset pass) instead of a single-partition cumulative window"))
 
+    val sections = if (only.isEmpty) picks else only.map(_ -> "")
     val sb = new StringBuilder
     sb ++= "# PLANS — finalized physical plans of headline queries\n\n"
-    sb ++= s"Generated by `runMain graft.PlanReport $sfDir` (post-AQE, after\n"
+    val invoked = if (only.isEmpty) sfDir else (Seq(sfDir, outFile) ++ only).mkString(" ")
+    sb ++= s"Generated by `runMain graft.PlanReport $invoked` (post-AQE, after\n"
     sb ++= "execution, so joins/codegen stages are the ones that actually ran).\n"
-    picks.foreach { case (name, note) =>
+    sections.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE
       sb ++= s"\n## $name\n\n$note\n\n```\n"

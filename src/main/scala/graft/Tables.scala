@@ -92,19 +92,4 @@ object Tables {
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
-
-  /** Persist a table bucketed (and sorted within buckets) by a join key.
-    * Repeated joins/aggregations on that key then read co-located buckets
-    * and skip the exchange entirely — at 100 TB the difference between
-    * re-shuffling the fact table per query and never shuffling it (the
-    * shuffle is paid ONCE, at write time). Spark bucketing requires the
-    * catalog (`saveAsTable`) — plain parquet paths carry no bucket spec.
-    * Join both sides with the same bucket count; TablesSpec asserts the
-    * exchange-free plan.
-    */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    keyCol: String): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .format("parquet").saveAsTable(table)
 }

@@ -6,10 +6,7 @@ import org.apache.spark.sql.functions._
 /** Vector math over ArrayType(Float) columns (F16; SURVEY.md §2.11).
   *
   * Default implementations are the native codegen'd Catalyst expressions
-  * (graft.functions.VecExprs — primitive loop inside whole-stage codegen);
-  * the `aggregate(zip_with(...))` higher-order forms are kept as `*Hof`
-  * for cross-checking in specs — both fold sequentially in index order on
-  * doubles, so results are bit-identical.
+  * (graft.functions.VecExprs — primitive loop inside whole-stage codegen).
   */
 object VectorOps {
 
@@ -18,17 +15,6 @@ object VectorOps {
 
   /** Σ (aᵢ−bᵢ)² — squared euclidean distance (codegen'd). */
   def sqDist(a: Column, b: Column): Column = VecExprs.sqDist(a, b)
-
-  /** HOF reference forms (interpreted; spec cross-check only). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double")
-      d * d
-    }), lit(0.0), (acc, v) => acc + v)
 
   /** ‖a‖₂ */
   def norm(a: Column): Column = sqrt(dot(a, a))

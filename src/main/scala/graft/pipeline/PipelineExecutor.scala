@@ -82,12 +82,7 @@ object Cli {
     val query = opts.getOrElse("-q", "example topic")
     val maxArticles = opts.getOrElse("-x", "50").toInt
     val dataDir = opts.getOrElse("-d", "data")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     val df = new PipelineExecutor(dataDir).execute(spark, query, maxArticles)
     println(s"rows=${df.count()}")
     spark.stop()

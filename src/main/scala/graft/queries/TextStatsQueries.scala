@@ -57,9 +57,10 @@ object TextStatsQueries {
   /** q37: top-50 lemmatized terms (F14 lemmatizer over the corpus).
     * Top-k FIRST via orderBy+limit — Spark plans TakeOrderedAndProject
     * (per-partition partial top-50, tiny driver merge), so no vocabulary-
-    * sized single-partition WindowExec at any corpus size; the rank window
-    * then runs over exactly 50 rows (partitionBy(lit) keeps WindowExec on
-    * its no-warning path).
+    * sized single-partition WindowExec at any corpus size. The rank window
+    * then runs over exactly 50 rows, unpartitioned by design: WindowExec
+    * logs "No Partition Defined", which costs nothing here, since the top-50
+    * is already one partition.
     */
   def q37LemmaCount(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -70,7 +71,7 @@ object TextStatsQueries {
       .orderBy($"cnt".desc, $"lemma")
       .limit(50)
       .withColumn("rk", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"cnt".desc, $"lemma")).cast("long"))
+        Window.orderBy($"cnt".desc, $"lemma")).cast("long"))
       .orderBy($"rk")
   }
 

@@ -24,27 +24,6 @@ import org.apache.spark.sql.types.LongType
   * needs).
   */
 object Ids {
-
-  /** Salted equi-join for skewed keys — the manual fallback when AQE's
-    * skew-join split doesn't apply (broadcast-ineligible dimension, hot
-    * keys known in advance, stream-stream). The small side is replicated
-    * across `salts` buckets; each big-side row routes to exactly one
-    * bucket by a deterministic hash of `routeBy` (NOT rand() — retries
-    * and speculative tasks must route identically), so one hot key's rows
-    * spread over `salts` tasks instead of one.
-    * Semantics = `big.join(small, Seq(key), "inner")` exactly; cost =
-    * small side ×salts (pick salts ≪ cluster cores, small ≪ big).
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 routeBy: String, salts: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val b = big.withColumn("__salt",
-      pmod(xxhash64(col(routeBy)), lit(salts.toLong)).cast("int"))
-    val s = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    b.join(s, Seq(key, "__salt"), "inner").drop("__salt")
-  }
-
   def denseIndex(df: DataFrame, outCol: String, keyCols: String*): DataFrame =
     // the inclusive scan of the constant 1 is 1-based rank; shift to 0..n-1
     scanOrdered(df, outCol, _ => 1L, keyCols)

@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -85,28 +85,4 @@ class TablesSpec extends SparkSpec {
     assert(jobsDuring(Tables.rowCount(spark, dir, "embeddings")) == 0)
     assert(jobsDuring(SimQueries.q41IvfTopk(spark, dir)) <= 2)
   }
-
-  test("bucketed tables join without an exchange on the bucket key") {
-    val docs = (0L until 500L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val scores = (0L until 500L).map(i => (i, i * 0.5)).toDF("doc_id", "score")
-    Tables.writeBucketed(docs, "b_docs", buckets = 4, keyCol = "doc_id")
-    Tables.writeBucketed(scores, "b_scores", buckets = 4, keyCol = "doc_id")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("b_docs").join(spark.table("b_scores"), "doc_id")
-      assert(joined.count() == 500)
-      joined.collect() // finalize AQE before reading the executed plan
-      val plan = joined.queryExecution.executedPlan.toString
-      // both sides read pre-bucketed data: a sort-merge join with NO
-      // shuffle exchange anywhere (broadcast disabled above — it would
-      // hide the property under test)
-      assert(plan.contains("SortMergeJoin"), plan.take(800))
-      assert(!plan.contains("Exchange hashpartitioning"), plan.take(800))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_docs")
-      spark.sql("DROP TABLE IF EXISTS b_scores")
-    }
-  }
 }

@@ -26,19 +26,6 @@ class UtilSpec extends SparkSpec {
     assert(a.values.toSeq.sorted == (0L until 500L))
   }
 
-  test("saltedJoin equals the plain join on skewed keys") {
-    // 900 of 1000 rows share one hot key
-    val big = (0 until 1000)
-      .map(i => (if (i < 900) "hot" else s"k$i", i.toLong)).toDF("k", "id")
-    val small = Seq(("hot", 1.0), ("k950", 2.0), ("absent", 3.0)).toDF("k", "w")
-    val plain = big.join(small, Seq("k"), "inner")
-      .select($"k", $"id", $"w").collect().map(_.toSeq).toSet
-    val salted = Ids.saltedJoin(big, small, "k", "id", salts = 8)
-      .select($"k", $"id", $"w").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(salted.size == 901)
-  }
-
   test("prefixSum equals the single-partition window cumsum") {
     import org.apache.spark.sql.expressions.Window
     val df = (0 until 300).map(i => ((i * 7 % 300).toLong, (i % 13 + 1).toLong))
