@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * Protocol (two-phase, as in the reference): normalize whitespace/HTML →
   * flag bad cells to NULL (blacklist phrases, boilerplate regex, min length,
   * whitespace-only) → drop rows where any required column is null. All rules
-  * are `when`/`rlike`/`length` chains — whole-stage codegen'd, no UDFs, and
-  * they push down/compose freely under Catalyst.
+  * are Column expressions (`rlike`/`length`) — whole-stage codegen'd, no
+  * UDFs, and they push down/compose freely under Catalyst.
   */
 object Cleaner {
 
@@ -23,7 +23,7 @@ object Cleaner {
     "log in", "login", "privacy policy", "terms of service", "all rights reserved",
     "copyright", "advertisement")
 
-  private val blacklistRe = "(?i)(" + blacklist.map(java.util.regex.Pattern.quote).mkString("|") + ")"
+  private val blacklistRe = "(?i:" + blacklist.map(java.util.regex.Pattern.quote).mkString("|") + ")"
 
   /** Content patterns that invalidate a cell on substring match
     * (content_cleaner.py:56-61): URLs, emails, phone numbers, html tags.
@@ -68,34 +68,32 @@ object Cleaner {
     * covers title/paragraph/description only). A URL or the word "cookie"
     * inside an article body must NOT drop the row; min-length and blank
     * rules still apply to body.
+    *
+    * A row that survives the drop has every flagged cell equal to its
+    * normalized value, so flag-then-drop is a filter over the normalized
+    * cells: keep the row when no cell is null and no rule bites. Catalyst
+    * pushes that filter below the normalize projection and inlines the
+    * normalize chain into every reference to a cell, so the filter
+    * references each cell exactly once: one pattern per column ORs every
+    * null-out rule (see [[ruleRe]]). Each column is then normalized twice
+    * (filter, output) and each rule evaluated once.
     */
   def clean(df: DataFrame, cols: Seq[String] = Seq("title", "description", "body", "paragraph")): DataFrame = {
     val present = cols.filter(df.columns.contains)
-    // Stage 1: normalize each column ONCE into a plain attribute. This is a
-    // separate projection on purpose: stage 2 references each normalized
-    // value several times, and CollapseProject keeps the boundary when a
-    // non-cheap producer expression is consumed more than once — so the
-    // regexp_replace chain is never duplicated into the flag CASEs.
-    val normalized = present.foldLeft(df) { (d, name) =>
-      d.withColumn(name, normalize(col(name)))
-    }
-    // Stage 2: one flat CASE per column ORing every null-out rule
-    // (P7 | P9 | P8 | P10). Each rule independently maps the cell to NULL,
-    // so rule order is immaterial and a single `when` replaces the previous
-    // 4-deep nest — whose repeated `.otherwise(c)` branches doubled the
-    // expression tree per layer and pushed the fused Project past janino's
-    // 64 KB per-method limit, silently dropping the whole ETL clean stage
-    // to interpreted evaluation.
-    val flagged = present.foldLeft(normalized) { (d, name) =>
-      val c = col(name)
-      val contentBad =
-        if (name == "body") lit(false)
-        else c.rlike(blacklistRe) || c.rlike(removalRe)
-      d.withColumn(name,
-        when(contentBad || length(c) < minLens.getOrElse(name, 1) ||
-          c.rlike("^\\s*$"), lit(null)).otherwise(c))
-    }
-    flagged.na.drop("any", present)
+    // a null cell makes its NOT RLIKE null, which the filter drops like false
+    df.withColumns(present.map(c => c -> normalize(col(c))).toMap)
+      .filter(present.map(c => !col(c).rlike(ruleRe(c))).reduce(_ && _))
+  }
+
+  /** One pattern matching a cell that a null-out rule flags: P7 | P9 (not
+    * for body) | P8 | P10. `rlike` finds a match anywhere, so an
+    * alternation matches exactly when one of its branches does. P8 is the
+    * branch matching a whole cell of fewer than the minimum code points,
+    * which is what `length` counts.
+    */
+  private def ruleRe(name: String): String = {
+    val content = if (name == "body") Nil else Seq(blacklistRe, removalRe)
+    (content :+ s"\\A[\\s\\S]{0,${minLens.getOrElse(name, 1) - 1}}\\z" :+ "^\\s*$").mkString("|")
   }
 
   /** P12: pick the longer of two strings; EXACT tie → "" — the reference's
@@ -112,9 +110,9 @@ object Cleaner {
     * (content_cleaner.py:5-131): fillna "" (P5) → longest-of body/title
     * coalesce (P12) → rename to canonical names (P4) → flag-then-drop
     * (P7–P11) → canonical 8-column projection (P6). Pure column
-    * expressions end to end — no shuffle; two staged codegen projections
-    * (normalize, then flag) sized to stay under janino's 64 KB method
-    * limit so the ETL clean path actually runs compiled, not interpreted.
+    * expressions end to end — no shuffle, one filter and one projection,
+    * small enough to stay under janino's 64 KB method limit so the ETL
+    * clean path actually runs compiled, not interpreted.
     */
   def cleanArticles(df: DataFrame, strictParity: Boolean = false): DataFrame = {
     val strCols = df.schema.fields

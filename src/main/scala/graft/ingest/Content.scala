@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * S7/S8/S9). Each partition instantiates the fetcher once (the analogue
   * of per-thread session reuse) and maps URLs to the dual-extractor schema;
   * failures become an `error` column the caller filters — row-level fault
-  * tolerance, not job failure (content_extractor.py:194-199).
+  * tolerance, not job failure (content_extractor.py:194-199). The
+  * pipeline's link side is bounded and kept on one partition, so there the
+  * fetch is one task: a few dozen links leave no parallelism to lose.
   */
 object Content {
 

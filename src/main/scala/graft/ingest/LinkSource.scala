@@ -42,19 +42,16 @@ final class FixtureLinkSource(val name: String, dropEvery: Int = 17,
         substring(md5(canonical), 1, 8), lit("/RU="),
         url_encode(canonical), lit("/RK=2"))
     else canonical
-    spark.range(maxArticles)
-      .withColumn("engine", lit(name))
-      .withColumn("se_link",
-        when(col("id") % dropEvery === lit(dropEvery - 1), lit(null))
-          .otherwise(link))
-      .withColumn("se_title",
-        concat(lit(s"$name result about $query #"), col("id").cast("string")))
-      .withColumn("se_description",
-        concat(lit(s"Search description from $name for query '$query', item "),
-          col("id").cast("string"),
-          lit(". Deterministic fixture snippet long enough to survive the description length rule of the cleaner stage.")))
-      .withColumn("se_source", concat(lit("source-"), (col("id") % 7).cast("string")))
-      .drop("id")
+    val id = col("id")
+    spark.range(maxArticles).select(
+      lit(name).as("engine"),
+      when(id % dropEvery === lit(dropEvery - 1), lit(null)).otherwise(link).as("se_link"),
+      concat(lit(s"$name result about $query #"), id.cast("string")).as("se_title"),
+      concat(lit(s"Search description from $name for query '$query', item "),
+        id.cast("string"),
+        lit(". Deterministic fixture snippet long enough to survive the description length rule of the cleaner stage.")
+      ).as("se_description"),
+      concat(lit("source-"), (id % 7).cast("string")).as("se_source"))
   }
 }
 
@@ -75,17 +72,21 @@ object LinkExtractor {
   /** S6/U1/J3/O1: fan out all engines, cap each at `maxArticles`, decode
     * links, union, and dedup by URL keeping the LAST engine's record
     * (arrival order = source position, as the reference's dict-overwrite
-    * does at link_extractor.py:558).
+    * does at link_extractor.py:558). The result is at most
+    * `sources.size × maxArticles` rows, so it lives on one partition: the
+    * window's clustering is then already satisfied and the dedup runs in
+    * the fan-out's own task, with no exchange.
     */
   def allLinks(spark: SparkSession, query: String, maxArticles: Int,
                sources: Seq[LinkSource] = defaultSources): DataFrame = {
     val perEngine = sources.zipWithIndex.map { case (s, i) =>
-      s.links(spark, query, maxArticles)
-        .limit(maxArticles)
-        .withColumn("se_link", decodeLink(col("se_link")))
-        .withColumn("arrival", lit(i))
+      val l = s.links(spark, query, maxArticles).limit(maxArticles)
+      l.select(l.columns.map {
+        case "se_link" => decodeLink(col("se_link")).as("se_link")
+        case c => col(c)
+      } :+ lit(i).as("arrival"): _*)
     }
-    val all = perEngine.reduce(_ unionByName _)
+    val all = perEngine.reduce(_ unionByName _).coalesce(1)
     val w = Window.partitionBy(col("se_link")).orderBy(col("arrival").desc)
     all.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn", "arrival")

@@ -11,10 +11,11 @@ import graft.ingest.{Content, ContentFetcher, FixtureFetcher, LinkExtractor, Lin
   * the §3.1 lifecycle): cache probe → links fan-out → content fetch →
   * merge → explode to paragraph grain → raw zone → clean → clean zone.
   *
-  * Spark shape: the whole chain is ONE lazy logical plan until each zone
-  * write; links are tiny (≤ 3·maxArticles) so the links×content join is a
-  * broadcast — no shuffle anywhere except the keep-last link dedup, whose
-  * key space is also ≤ 3·maxArticles rows. The two-zone parquet layout and
+  * Spark shape: a miss is two queries, one per zone write, with no driver
+  * round trip in between. The link side is bounded (≤ sources ×
+  * maxArticles rows), so the fan-out, the keep-last dedup, the fetch, the
+  * links×content join and the article numbering all run in one task —
+  * no shuffle anywhere. The two-zone parquet layout and
   * `{query}_{maxArticles}` cache key match the reference
   * (pipeline_executor.py:94-101,120-124).
   */
@@ -52,14 +53,19 @@ final class PipelineExecutor(
     val content = Content.fetch(links, fetcher)
 
     // 5: inner merge (J1, failed fetches drop out), article id BEFORE
-    // explode (P13: dense 0..n-1 over the stable link key — computed
-    // distributed via range-partition + partition-offset prefix sums, not
-    // a single-partition global window and not
-    // monotonically_increasing_id), explode to paragraph grain (F22)
-    val merged = broadcast(links)
+    // explode (P13), explode to paragraph grain (F22). Both join sides are
+    // the one-partition link side, so a merge join needs no exchange and
+    // the whole raw query is one task (a broadcast would be a job of its
+    // own). `article_index` is the row's position in that partition after
+    // sorting by `se_link`: dense 0..n-1 in link order, and deterministic
+    // because the sort key is unique (the keep-last dedup leaves one row
+    // per `se_link`, and the fetch maps each link to at most one row).
+    // `coalesce(1)` enforces the single partition the numbering relies on.
+    val merged = links.hint("merge")
       .join(content, links("se_link") === content("bs_link"), "inner")
-    val withIdx = graft.util.Ids.denseIndex(merged, "article_index", "se_link")
-    val raw = withIdx
+      .coalesce(1).sortWithinPartitions("se_link")
+    val raw = merged
+      .withColumn("article_index", monotonically_increasing_id())
       .withColumn("paragraph", explode(col("bs_paragraph")))
       .drop("n3k_published")
     raw.write.mode("overwrite").parquet(rawPath(query, maxArticles))

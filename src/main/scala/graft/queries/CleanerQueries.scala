@@ -22,16 +22,12 @@ object CleanerQueries {
     val docs = Tables.balanced(spark, dir, "documents")
       .withColumn("title", substring($"text", 1, 30))
       .withColumn("paragraph", substring($"text", 41, 2000))
-    val blacklistRe = "(?i)(error|crash)"
-    val flag = (c: org.apache.spark.sql.Column, minLen: Int) => {
-      val b1 = when(c.rlike(blacklistRe), lit(null)).otherwise(c)
-      val b2 = when(length(b1) < minLen, lit(null)).otherwise(b1)
-      when(b2.rlike("^\\s*$"), lit(null)).otherwise(b2)
-    }
-    docs
-      .withColumn("title", flag($"title", 20))
-      .withColumn("paragraph", flag($"paragraph", 150))
-      .na.drop("any", Seq("title", "paragraph"))
+    // a row survives flag-then-drop exactly when no rule flags either
+    // cell, so the drop is one filter evaluating each rule once per cell
+    // (a null cell fails it too)
+    val keep = (c: org.apache.spark.sql.Column, minLen: Int) =>
+      !c.rlike("(?i)(error|crash)") && length(c) >= minLen && !c.rlike("^\\s*$")
+    docs.filter(keep($"title", 20) && keep($"paragraph", 150))
       .select($"doc_id", $"title", $"paragraph")
       .orderBy($"doc_id")
   }

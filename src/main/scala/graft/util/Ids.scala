@@ -4,38 +4,27 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
-/** Deterministic dense row ids (SURVEY.md P13) without a global window.
+/** Distributed ordered scans (SURVEY.md P13's shape, for unbounded tables).
   *
-  * `row_number().over(Window.orderBy(key))` is the obvious translation of
-  * pandas' `reset_index`, but it funnels EVERY row through one partition
-  * (WindowExec's "No Partition Defined" path) — fine for a bounded link
-  * table, fatal for a corpus. This helper produces the same 0..n-1
-  * numbering fully distributed:
+  * `sum(...).over(Window.orderBy(key))` is the obvious translation of a
+  * pandas cumulative sum, but it funnels EVERY row through one partition
+  * (WindowExec's "No Partition Defined" path) — fine for a bounded table,
+  * fatal for a corpus. [[prefixSum]] produces the same values fully
+  * distributed:
   *
   *  1. range-repartition + sort within partitions by the key (total order
   *     across partitions, each partition sorted — no single-point sort);
-  *  2. one lightweight count-per-partition job;
+  *  2. one lightweight total-per-partition job;
   *  3. map each partition with its exclusive-prefix-sum offset.
   *
   * Determinism requires the key to be unique (range boundaries are sampled,
   * so ties may land in either of two adjacent partitions; with unique keys
-  * the final numbering is order-isomorphic to the key and thus unique and
-  * stable across runs/cluster sizes — the property the oracle compare
-  * needs).
+  * the result is order-isomorphic to the key and thus unique and stable
+  * across runs/cluster sizes — the property the oracle compare needs).
   */
 object Ids {
-  def denseIndex(df: DataFrame, outCol: String, keyCols: String*): DataFrame =
-    // the inclusive scan of the constant 1 is 1-based rank; shift to 0..n-1
-    scanOrdered(df, outCol, _ => 1L, keyCols)
-      .withColumn(outCol, col(outCol) - 1)
-
-  /** Distributed inclusive prefix sum of `valueOf(row)` in `keyCols` order
-    * — the scalable replacement for `sum(...).over(Window.orderBy(key))`,
-    * which funnels the whole table through ONE partition. Same two-phase
-    * shape as [[denseIndex]] (which is the prefix sum of the constant 1):
-    * range-partition + sort, one per-partition-totals job, then a mapped
-    * pass adding each partition's exclusive offset. Integer math → exact
-    * and order-independent across any partitioning.
+  /** Distributed inclusive prefix sum of `valueCol` in `keyCols` order.
+    * Integer math → exact and order-independent across any partitioning.
     */
   def prefixSum(df: DataFrame, outCol: String, valueCol: String,
                 keyCols: String*): DataFrame = {

@@ -68,4 +68,22 @@ class PipelineSpec extends SparkSpec {
     val again = pipe.execute(spark, "nvidia earnings", maxArticles = 20)
     assert(again.count() == n)
   }
+
+  test("a miss numbers articles 0..n-1 in link order, in two jobs") {
+    val dir = Files.createTempDirectory("graft-pipe-idx").toString
+    val pipe = new PipelineExecutor(dir)
+    pipe.execute(spark, "chip exports", maxArticles = 40)
+    // raw write plus clean write; the link side adds no job of its own
+    assert(jobsDuring(pipe.execute(spark, "chip exports", maxArticles = 40, overwrite = true)) <= 2)
+    // the raw zone holds every fetched article; the cleaner may drop some
+    val articles = spark.read.parquet(pipe.rawPath("chip exports", 40))
+      .select($"article_index", $"se_link".as("link")).distinct()
+    val want = articles.withColumn("want",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy("link")) - 1)
+    assert(want.count() > 10)
+    assert(want.filter($"article_index" =!= $"want").count() == 0)
+    val clean = pipe.execute(spark, "chip exports", maxArticles = 40)
+      .select("article_index", "link").distinct()
+    assert(clean.count() > 0 && clean.exceptAll(articles).count() == 0)
+  }
 }

@@ -7,23 +7,14 @@ import graft.functions.VecAgg
 class UtilSpec extends SparkSpec {
   import spark.implicits._
 
-  test("denseIndex assigns 0..n-1 in key order, distributed") {
-    val df = Seq("delta", "alpha", "echo", "bravo", "charlie")
-      .toDF("k").repartition(4)
-    val got = Ids.denseIndex(df, "idx", "k")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("alpha" -> 0L, "bravo" -> 1L, "charlie" -> 2L,
-      "delta" -> 3L, "echo" -> 4L))
-  }
-
-  test("denseIndex is stable across input partitioning") {
-    val rows = (0 until 500).map(i => f"key_$i%04d")
-    val a = Ids.denseIndex(rows.toDF("k").repartition(7), "idx", "k")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = Ids.denseIndex(rows.toDF("k").repartition(13), "idx", "k")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  test("prefixSum is stable across input partitioning") {
+    val rows = (0 until 500).map(i => (f"key_$i%04d", (i % 11 + 1).toLong))
+    val a = Ids.prefixSum(rows.toDF("k", "v").repartition(7), "cum", "v", "k")
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    val b = Ids.prefixSum(rows.toDF("k", "v").repartition(13), "cum", "v", "k")
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(a == b)
-    assert(a.values.toSeq.sorted == (0L until 500L))
+    assert(a.values.toSeq.sorted == rows.map(_._2).scanLeft(0L)(_ + _).tail)
   }
 
   test("prefixSum equals the single-partition window cumsum") {
@@ -38,12 +29,12 @@ class UtilSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("denseIndex/prefixSum reject duplicate keys loudly") {
+  test("prefixSum rejects duplicate keys loudly") {
     // ADVICE r03: with non-unique keys a recomputed block could land ties
     // in a different range partition — assert instead of documenting
-    val df = Seq("a", "b", "b", "c").toDF("k").repartition(3)
+    val df = Seq("a", "b", "b", "c").map(k => (k, 1L)).toDF("k", "v").repartition(3)
     val e = intercept[IllegalArgumentException] {
-      Ids.denseIndex(df, "idx", "k").collect()
+      Ids.prefixSum(df, "cum", "v", "k").collect()
     }
     assert(e.getMessage.contains("not unique"))
   }
