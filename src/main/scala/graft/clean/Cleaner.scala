@@ -35,25 +35,7 @@ object Cleaner {
   def normalize(c: Column): Column =
     trim(regexp_replace(regexp_replace(c, "<[^>]*>", " "), "[\\n\\t ]+", " "))
 
-  /** P7: cell → null when it contains any blacklist phrase. */
-  def nullIfBlacklisted(c: Column): Column =
-    when(c.rlike(blacklistRe), lit(null)).otherwise(c)
-
-  /** P9: cell → null when it matches a boilerplate content pattern. */
-  def nullIfBoilerplate(c: Column): Column =
-    when(c.rlike(removalRe), lit(null)).otherwise(c)
-
-  /** P8: cell → null when shorter than the per-column minimum
-    * (content_cleaner.py:88-94: title 20, description 100, body 400,
-    * paragraph 150).
-    */
-  def nullIfShort(c: Column, minLen: Int): Column =
-    when(length(c) < minLen, lit(null)).otherwise(c)
-
-  /** P10: whitespace-only cell → null. */
-  def nullIfBlank(c: Column): Column =
-    when(c.rlike("^\\s*$"), lit(null)).otherwise(c)
-
+  /** P8's per-column minimum length (content_cleaner.py:88-94). */
   val minLens: Map[String, Int] =
     Map("title" -> 20, "description" -> 100, "body" -> 400, "paragraph" -> 150)
 
@@ -96,15 +78,13 @@ object Cleaner {
     (content :+ s"\\A[\\s\\S]{0,${minLens.getOrElse(name, 1) - 1}}\\z" :+ "^\\s*$").mkString("|")
   }
 
-  /** P12: pick the longer of two strings; EXACT tie → "" — the reference's
-    * initialize-then-overwrite quirk (content_cleaner.py:106-113), kept
-    * when `strictParity` (FIXTURES.md quirk 1), else ties keep `a`.
+  /** P12: pick the longer of two strings; a tie keeps `a`. The reference
+    * returns "" on an exact tie (content_cleaner.py:106-113, FIXTURES.md
+    * quirk 1); the cleaner fixes that, q9 reproduces it with its own
+    * expression.
     */
-  def longestOf(a: Column, b: Column, strictParity: Boolean = true): Column =
-    if (strictParity)
-      when(length(a) > length(b), a)
-        .when(length(a) < length(b), b).otherwise(lit(""))
-    else when(length(b) > length(a), b).otherwise(a)
+  def longestOf(a: Column, b: Column): Column =
+    when(length(b) > length(a), b).otherwise(a)
 
   /** The full ETL cleaning stage over the merged links×content frame
     * (content_cleaner.py:5-131): fillna "" (P5) → longest-of body/title
@@ -114,13 +94,13 @@ object Cleaner {
     * small enough to stay under janino's 64 KB method limit so the ETL
     * clean path actually runs compiled, not interpreted.
     */
-  def cleanArticles(df: DataFrame, strictParity: Boolean = false): DataFrame = {
+  def cleanArticles(df: DataFrame): DataFrame = {
     val strCols = df.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.StringType).map(_.name)
     val filled = df.na.fill("", strCols)
     val coalesced = filled
-      .withColumn("body", longestOf(col("n3k_body"), col("bs_body"), strictParity))
-      .withColumn("title", longestOf(col("n3k_title"), col("bs_title"), strictParity))
+      .withColumn("body", longestOf(col("n3k_body"), col("bs_body")))
+      .withColumn("title", longestOf(col("n3k_title"), col("bs_title")))
       .withColumn("title",
         when(length(col("se_title")) > length(col("title")), col("se_title"))
           .otherwise(col("title")))

@@ -18,21 +18,30 @@ import graft.nlp.text.Text
   * (seed|shingle), so signatures are reproducible across engines and runs —
   * no JVM-hash or RNG dependence.
   *
-  * Materialization policy (r21/r22): multi-consumer intermediates use
-  * `localCheckpoint`, not `cache()` — blocks are dropped by the
+  * Materialization policy — the one policy of the engine; every other
+  * materialization site points here:
+  *  - an operator that returns a lazy frame and re-reads a frame (both
+  *    sides of a self-join, a prune plus joins, an iterated round)
+  *    checkpoints that frame itself with `localCheckpoint(eager = false)`,
+  *    eager only where it needs the rows at once (connected-components
+  *    rounds); callers never checkpoint what they hand it (here and
+  *    `graft.util.Ids`);
+  *  - a fit persists its input for the call and releases it in `finally`
+  *    (`graft.wizard.Cluster.withPoints`);
+  *  - the WordWizard chain keeps its two caches until the caller releases
+  *    them (`graft.wizard.WordWizard`).
+  * `localCheckpoint`, not `cache()`: its blocks are dropped by the
   * ContextCleaner once the result is unreferenced (no leak in long-lived
-  * sessions) and the lineage cut keeps iterative plans bounded. The
-  * deliberate trade-off at cluster scale: local-checkpoint blocks live
-  * ONLY on executors and carry no lineage to recompute from, so losing an
-  * executor mid-query (dynamic-allocation decommission, spot kill, OOM
-  * kill) FAILS the query instead of recomputing the lost partitions.
-  * Deployments running these operators on a real cluster should either
-  * disable executor churn for the job (no dynamic allocation, or
-  * `spark.decommission.enabled` + block migration so blocks move before
-  * an executor exits), or swap in a reliable `checkpoint()` directory
-  * where re-running a failed query is more expensive than the HDFS/object-
-  * store write. local[*] (the bench and tests) has a single process and no
-  * executor loss, so the caveat is cluster-only.
+  * sessions), the lineage cut keeps iterative plans bounded, and a lost
+  * block fails the query instead of recomputing it (a recompute of a
+  * range-partitioned frame could land rows differently, see `Ids`). The
+  * trade-off at cluster scale: local-checkpoint blocks live only on
+  * executors, so losing an executor mid-query (dynamic-allocation
+  * decommission, spot kill, OOM kill) FAILS the query. Deployments on a
+  * real cluster should disable executor churn for the job (no dynamic
+  * allocation, or `spark.decommission.enabled` with block migration) or
+  * swap in a reliable `checkpoint()` directory. local[*] has a single
+  * process and no executor loss.
   */
 object Dedup {
 
@@ -111,11 +120,13 @@ object Dedup {
   def lshCandidatePairs(wide: DataFrame, idCol: String,
                         bandRows: Int = 2): DataFrame = {
     require(bandRows >= 1, s"bandRows=$bandRows must be >= 1")
+    // both band sides read the signatures (materialization policy: object docs)
+    val sig = wide.localCheckpoint(false)
     val nBands = (size(col("sig")) / bandRows).cast("int") // sig length is uniform
     // nBands=0 (sig shorter than one band) must emit NO bands — the naked
     // sequence(0, -1) is DESCENDING [0,-1] and would fabricate a band=-1
     // row with garbage slice offsets (ADVICE r03)
-    val banded = wide.select(col(idCol), col("sig"),
+    val banded = sig.select(col(idCol), col("sig"),
         explode(when(nBands >= 1, sequence(lit(0), nBands - 1))
           .otherwise(array().cast("array<int>"))).as("band"))
       .withColumn("bsig",
@@ -185,7 +196,9 @@ object Dedup {
     // smaller than the corpus) makes both passes proportional to the pairs
     // being verified. Row-for-row identical output: the inner joins dropped
     // non-participants anyway.
-    val ids = pairs
+    // the prune and both joins read the pairs (materialization policy: object docs)
+    val candPairs = pairs.localCheckpoint(false)
+    val ids = candPairs
       .select(explode(array(col("doc_a"), col("doc_b"))).as(idCol))
       .distinct()
     val cand = df.join(ids, Seq(idCol), "leftsemi")
@@ -204,12 +217,12 @@ object Dedup {
     // per pair (q25/q38) need NO re-join of the verify output back onto the
     // pair frame — that join was a pair-grain shuffle whose left side was
     // by construction a superset of the right.
-    pairs
+    candPairs
       .join(sets.select(col("vp_id").as("doc_a"), col("gset").as("ga")), "doc_a")
       .join(sets.select(col("vp_id").as("doc_b"), col("gset").as("gb")), "doc_b")
       .withColumn("inter", size(array_intersect(col("ga"), col("gb"))))
       .filter(col("inter") > 0)
-      .select(pairs.columns.map(col) :+
+      .select(candPairs.columns.map(col) :+
         (col("inter") /
           (size(col("ga")) + size(col("gb")) - col("inter"))).as("jaccard"): _*)
   }
@@ -246,13 +259,7 @@ object Dedup {
                           localEdgeThreshold: Long = 20000000L): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // localCheckpoint, not persist (r22): the persisted pair frame was
-    // unpersisted only on the empty-graph branch — on both real paths its
-    // blocks lingered for the life of the session (the same leak class the
-    // r21 pass closed at the other dedup sites). The count() below
-    // materializes the lazy checkpoint; blocks auto-drop via the
-    // ContextCleaner once the result is unreferenced. Executor-loss caveat:
-    // see the materialization policy in the object docs.
+    // the count and either strategy read the edges (materialization policy: object docs)
     val dedupedPairs = pairs
       .select(col("doc_a").cast("long").as("a"), col("doc_b").cast("long").as("b"))
       .distinct()
@@ -367,13 +374,7 @@ object Dedup {
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 3, chunks: Int = 4): DataFrame = {
     val chunkLen = 64 / chunks
-    // both join sides reuse the signature subtree — materialize once
-    // (64 bits/doc; the recompute would double the bit-vote aggregation).
-    // localCheckpoint, not cache (r21): this library .cache() was never
-    // unpersisted — a leak in long-lived sessions; checkpoint blocks are
-    // dropped by the ContextCleaner once the result is unreferenced.
-    // Executor-loss caveat: see the materialization policy in the object
-    // docs above.
+    // both join sides read the signatures (materialization policy: object docs)
     val sh = simHash(df, idCol, textCol).localCheckpoint(false)
     val banded = sh.select(col(idCol), col("simhash"),
         explode(sequence(lit(0), lit(chunks - 1))).as("band"))

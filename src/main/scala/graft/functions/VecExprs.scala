@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
+import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -230,6 +231,10 @@ object VecExprs {
   def sqDist(a: Column, b: Column): Column =
     GraftSqlBridge.column(FloatVecSqDist(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  /** ‖a‖₂ */
+  def norm(a: Column): Column = sqrt(dot(a, a))
+  /** cos(a,b) = a·b / (‖a‖‖b‖) */
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 }
 
 /** SQL surface: `spark.sql.extensions=graft.functions.GraftExtensions`
@@ -246,6 +251,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("str_hamming"),
       new ExpressionInfo(classOf[StrHamming].getName, "str_hamming"),
       (args: Seq[Expression]) => StrHamming(args(0), args(1))))
-    ext.injectOptimizerRule(_ => SqrtComparisonRule)
   }
 }

@@ -65,23 +65,9 @@ object DedupQueries {
   def q25NeardupLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.balanced(spark, dir, "documents")
-    // wide signatures feed both join sides — materialize once (one row/doc)
-    // instead of recomputing the shingle scan per side; the estimate rides
-    // along in-row from the pair join (no signature re-join).
-    // localCheckpoint, not cache (r21): a .cache() here is never
-    // unpersisted — a slow leak in any long-lived session — while
-    // checkpoint blocks are dropped by the ContextCleaner as soon as the
-    // query's RDD is unreferenced. Same single materialization either way.
-    // Executor-loss caveat at cluster scale: see Dedup's materialization
-    // policy (object docs).
-    val sig = Dedup.minHashWide(docs, "doc_id", "text", 3, 8)
-      .localCheckpoint(false)
-    // pairs feed two consumers (the participant-id prune and the verify
-    // joins) — materialize the tiny pair frame so the band self-join runs
-    // once; verifyPairs passes est_jaccard through and appends jaccard, so
-    // no re-join of verify output onto the pair frame is needed (r21).
-    val pairs = Dedup.lshCandidatePairs(sig, "doc_id", bandRows = 2)
-      .localCheckpoint(false)
+    // verifyPairs passes est_jaccard through and appends jaccard: no re-join
+    val pairs = Dedup.lshCandidatePairs(
+      Dedup.minHashWide(docs, "doc_id", "text", 3, 8), "doc_id", bandRows = 2)
     Dedup.verifyPairs(pairs, docs, "doc_id", "text")
       .orderBy($"doc_a", $"doc_b")
   }
@@ -138,13 +124,8 @@ object DedupQueries {
   def q39NeardupGroups(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.balanced(spark, dir, "documents")
-    // materialize: the band self-join consumes the signature subtree on
-    // BOTH sides with different aliases, which defeats exchange reuse —
-    // without this the shingle scan + minhash agg runs twice.
-    // localCheckpoint, not cache — see q25 (auto-dropped, no session leak).
-    val sig = Dedup.minHashWide(docs, "doc_id", "text", 3, 8)
-      .localCheckpoint(false)
-    val pairs = Dedup.lshCandidatePairs(sig, "doc_id", bandRows = 2)
+    val pairs = Dedup.lshCandidatePairs(
+        Dedup.minHashWide(docs, "doc_id", "text", 3, 8), "doc_id", bandRows = 2)
       .filter($"est_jaccard" >= 0.5)
       .select($"doc_a", $"doc_b")
     Dedup.connectedComponents(pairs)
@@ -206,9 +187,6 @@ object DedupQueries {
       .bucketedPairs(joined, "doc_id", "embedding", bits = 8)
       .filter($"cosine" >= 0.15)
       .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b"), $"cosine")
-      // two consumers: the participant-id prune + the verify joins.
-      // localCheckpoint, not cache — see q25 (auto-dropped, no session leak).
-      .localCheckpoint(false)
     // verifyPairs passes cosine through and appends jaccard — no re-join
     // of the verify output onto the pair frame (r21).
     Dedup.verifyPairs(pairs, docs, "doc_id", "text")

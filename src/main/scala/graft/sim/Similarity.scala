@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorOps
+import graft.functions.VecExprs
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -39,14 +39,14 @@ object Similarity {
     a.join(c, Seq("bucket"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(VectorOps.cosine(col("va"), col("vb")), 6).as("cosine"))
+        round(VecExprs.cosine(col("va"), col("vb")), 6).as("cosine"))
   }
 
   /** IVF (inverted-file) approximate top-k — the 100 TB path: a coarse
     * quantizer of `nlist` cells partitions the corpus once; each query
     * scans only its `nprobe` nearest cells instead of the full corpus.
     * Centroids are a tiny broadcast dimension: each corpus row takes its
-    * nearest one by `VectorOps.sqDist` (no shuffle), then a hash join
+    * nearest one by `VecExprs.sqDist` (no shuffle), then a hash join
     * corpus⋈(query,cell) feeds a per-query top-k. Recall tunes with
     * nprobe; [[bruteForceTopK]] is the verifier.
     *
@@ -79,7 +79,7 @@ object Similarity {
     val cells = Seq(Tuple1(centers)).toDF("_cells")
 
     val assigned = corpus.crossJoin(broadcast(cells))
-      .withColumn("_d", transform(col("_cells"), c => VectorOps.sqDist(col(vecCol), c)))
+      .withColumn("_d", transform(col("_cells"), c => VecExprs.sqDist(col(vecCol), c)))
       .withColumn("_cell", array_position(col("_d"), array_min(col("_d"))).cast("int") - 1)
     val centroids = cells.select(posexplode(col("_cells")).as(Seq("_cell", "_centroid")))
 
@@ -87,7 +87,7 @@ object Similarity {
     val probes = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .crossJoin(broadcast(centroids))
-      .withColumn("cdist", VectorOps.sqDist(col("qv"), col("_centroid")))
+      .withColumn("cdist", VecExprs.sqDist(col("qv"), col("_centroid")))
       .withColumn("prk", row_number().over(probeW))
       .filter(col("prk") <= nprobe)
       .select(col("query_id"), col("qv"), col("_cell"))
@@ -98,7 +98,7 @@ object Similarity {
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("_cell"))
       .join(broadcast(probes), Seq("_cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(VectorOps.cosine(col("qv"), col("cv")), 6))
+      .withColumn("cosine", round(VecExprs.cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(rankW))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk").cast("long").as("rk"),
@@ -106,7 +106,7 @@ object Similarity {
   }
 
   /** `iterations` Lloyd steps from `k` distinct rows drawn with `seed`, in
-    * the arithmetic of VectorOps.sqDist; an empty cell keeps its centroid.
+    * the arithmetic of VecExprs.sqDist; an empty cell keeps its centroid.
     */
   private def lloyd(points: Array[Array[Float]], k: Int, seed: Long,
                     iterations: Int): Array[Array[Double]] = {
@@ -139,7 +139,7 @@ object Similarity {
       .orderBy(col("cosine").desc, col("neighbor_id"))
     broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(VectorOps.cosine(col("qv"), col("cv")), 6))
+      .withColumn("cosine", round(VecExprs.cosine(col("qv"), col("cv")), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk").cast("long").as("rk"),

@@ -28,23 +28,11 @@ object Ids {
     */
   def prefixSum(df: DataFrame, outCol: String, valueCol: String,
                 keyCols: String*): DataFrame = {
-    val idx = df.schema.fieldIndex(valueCol)
-    scanOrdered(df, outCol, _.getLong(idx), keyCols)
-  }
-
-  private def scanOrdered(df: DataFrame, outCol: String,
-                          valueOf: Row => Long,
-                          keyCols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
+    val idx = df.schema.fieldIndex(valueCol)
     val keys = keyCols.map(col)
     val sorted = df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
-    // localCheckpoint, NOT cache (ADVICE r03): a cache()d block evicted
-    // after the totals job would be recomputed, and with duplicate keys the
-    // re-sampled range boundaries could land ties in a different partition
-    // — silently corrupt (non-dense) numbering. localCheckpoint truncates
-    // lineage, so a lost block is a LOUD job failure instead; blocks are
-    // dropped by the ContextCleaner once the RDD is unreferenced (no
-    // session-lifetime accumulation).
+    // the totals job and the offset pass read it (materialization policy: graft.dedup.Dedup)
     val rdd = sorted.rdd.localCheckpoint()
     val keyIdx = keyCols.map(sorted.schema.fieldIndex)
     // one job: per-partition totals + duplicate-key detection. Rows are
@@ -57,7 +45,7 @@ object Ids {
         var prev: Seq[Any] = null
         var dup = false
         it.foreach { row =>
-          sum += valueOf(row)
+          sum += row.getLong(idx)
           val k = keyIdx.map(row.get)
           if (first == null) first = k
           if (prev == k) dup = true
@@ -67,12 +55,12 @@ object Ids {
       }
       .collect().sortBy(_._1)
     require(!totals.exists(_._5),
-      s"scanOrdered keys (${keyCols.mkString(",")}) are not unique — " +
+      s"prefixSum keys (${keyCols.mkString(",")}) are not unique — " +
         "numbering would not be deterministic (SURVEY P13 contract)")
     totals.map(t => (t._3, t._4)).filter(_._1.isDefined).sliding(2).foreach {
       case Array((_, Some(lastA)), (Some(firstB), _)) =>
         require(lastA != firstB,
-          s"scanOrdered keys (${keyCols.mkString(",")}) are not unique " +
+          s"prefixSum keys (${keyCols.mkString(",")}) are not unique " +
             "(duplicate straddles a partition boundary)")
       case _ => ()
     }
@@ -80,7 +68,7 @@ object Ids {
     val bc = spark.sparkContext.broadcast(offsets)
     val withSum = rdd.mapPartitionsWithIndex { case (pid, it) =>
       var acc = bc.value(pid)
-      it.map { row => acc += valueOf(row); Row.fromSeq(row.toSeq :+ acc) }
+      it.map { row => acc += row.getLong(idx); Row.fromSeq(row.toSeq :+ acc) }
     }
     spark.createDataFrame(withSum, sorted.schema.add(outCol, LongType))
   }

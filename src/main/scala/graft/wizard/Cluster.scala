@@ -66,7 +66,8 @@ object Cluster {
   /** `f` over the unit-weight points of `vecCol`, cached for `f` alone:
     * the row-solver instances of `ml.clustering.KMeans` (same partitions,
     * same row order, same norms), released however `f` ends. The caller's
-    * frame is never persisted or unpersisted here.
+    * frame is never persisted or unpersisted here (materialization policy:
+    * `graft.dedup.Dedup`).
     */
   private[graft] def withPoints[T](df: DataFrame, vecCol: String)(f: RDD[KM.Point] => T): T = {
     val points = df.select(col(vecCol)).rdd

@@ -3,7 +3,7 @@ package graft.wizard
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorOps
+import graft.functions.VecExprs
 
 /** Medoid selection (reference word_wizard.py:719-746, operators W1/W2/J5).
   *
@@ -37,7 +37,7 @@ object Medoids {
         .as("centroid"))
     val sq = df.join(broadcast(centroids), Seq(clusterCol))
       .select(col(idCol), col(clusterCol),
-        graft.functions.VecExprs.sqDist(col(vecCol), col("centroid")).as("sqdist"))
+        VecExprs.sqDist(col(vecCol), col("centroid")).as("sqdist"))
     val w = Window.partitionBy(col(clusterCol))
       .orderBy(col("sqdist"), col(idCol))
     sq.withColumn("medoid_rank", row_number().over(w))
@@ -72,7 +72,7 @@ object Medoids {
     val a = capped.select(col(idCol).as("a_id"), col(clusterCol).as("cl"), col(vecCol).as("a_vec"))
     val b = capped.select(col(idCol).as("b_id"), col(clusterCol).as("cl"), col(vecCol).as("b_vec"))
     val pair = a.join(b, Seq("cl")).filter(col("a_id") =!= col("b_id"))
-      .withColumn("d", sqrt(VectorOps.sqDist(col("a_vec"), col("b_vec"))))
+      .withColumn("d", sqrt(VecExprs.sqDist(col("a_vec"), col("b_vec"))))
     val avgd = pair.groupBy(col("cl"), col("a_id"))
       .agg((sum(col("d")) / count(lit(1))).as("avg_dist"))
     val w = Window.partitionBy(col("cl")).orderBy(col("avg_dist"), col("a_id"))

@@ -30,7 +30,8 @@ import graft.nlp.kernels.{Embedder, TfIdfEmbedder, LeadKSummarizer}
   * Scale notes: the chain caches two frames, the embedding frame
   * (reference eagerness is load-bearing — the clustering scan and medoids
   * reuse it, SURVEY.md §4.2.2) and the clustered frame; both live until the
-  * caller releases them (`unpersist` / `catalog.clearCache`). The k-means
+  * caller releases them (`unpersist` / `catalog.clearCache`; materialization
+  * policy: `graft.dedup.Dedup`). The k-means
   * fit reads the embedding frame once into a vector cache of its own, fits
   * every candidate k in lockstep over it (one single-stage job per
   * algorithm step, no driver threads) and releases it before the stage

@@ -31,8 +31,8 @@ class CleanerSpec extends SparkSpec {
     val strCols = df.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.StringType).map(_.name)
     val coalesced = df.na.fill("", strCols)
-      .withColumn("body", Cleaner.longestOf(col("n3k_body"), col("bs_body"), strictParity = false))
-      .withColumn("title", Cleaner.longestOf(col("n3k_title"), col("bs_title"), strictParity = false))
+      .withColumn("body", Cleaner.longestOf(col("n3k_body"), col("bs_body")))
+      .withColumn("title", Cleaner.longestOf(col("n3k_title"), col("bs_title")))
       .withColumn("title",
         when(length(col("se_title")) > length(col("title")), col("se_title"))
           .otherwise(col("title")))
@@ -101,24 +101,29 @@ class CleanerSpec extends SparkSpec {
     assert(got == "a b c d")
   }
 
-  test("nullIfBlacklisted nulls on case-insensitive phrase hit") {
-    val got = Seq("Please SUBSCRIBE now", "fine text").toDF("t")
-      .select(Cleaner.nullIfBlacklisted($"t")).collect.map(r => Option(r.getString(0)))
-    assert(got.toSeq == Seq(None, Some("fine text")))
+  /** The `title` cells of `rows` that survive [[Cleaner.clean]]. */
+  private def survivingTitles(rows: String*): Seq[String] =
+    Cleaner.clean(rows.toDF("title")).collect().map(_.getString(0)).toSeq
+
+  test("clean drops a row whose cell holds a blacklist phrase in any case") {
+    assert(survivingTitles("Please SUBSCRIBE now to the brief", "fine text for a long title") ==
+      Seq("fine text for a long title"))
   }
 
-  test("nullIfBoilerplate nulls urls/emails/phones/tags") {
-    val rows = Seq("see https://x.io/a", "mail a.b@x.io ok",
-      "call +1 (415) 555-0199 now", "has <div> tag", "clean prose")
-    val got = rows.toDF("t")
-      .select(Cleaner.nullIfBoilerplate($"t")).collect.map(r => Option(r.getString(0)))
-    assert(got.toSeq == Seq(None, None, None, None, Some("clean prose")))
+  test("clean drops a row whose cell holds a url, email or phone; tags are stripped first") {
+    val got = survivingTitles("see https://x.io/a for the details",
+      "mail a.b@x.io for the details", "call +1 (415) 555-0199 for details",
+      "has <div> tag in the middle of it", "clean prose that is long enough")
+    assert(got == Seq("has tag in the middle of it", "clean prose that is long enough"))
   }
 
-  test("nullIfShort respects per-column minimum") {
-    val got = Seq("short", "long enough indeed!!").toDF("t")
-      .select(Cleaner.nullIfShort($"t", 20)).collect.map(r => Option(r.getString(0)))
-    assert(got.toSeq == Seq(None, Some("long enough indeed!!")))
+  test("clean drops a row with a cell under its column's minimum length") {
+    val (title, description) = ("long enough indeed!!", "d" * 100)
+    val got = Cleaner.clean(Seq(
+        (title, description), ("short", description), (title, "d" * 99))
+      .toDF("title", "description"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(got == Seq((title, description)))
   }
 
   test("body is exempt from blacklist and boilerplate nulling (content_cleaner.py:81-85,121-122)") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
-import graft.functions.VectorOps
+import graft.functions.VecExprs
 
 /** The `aggregate(zip_with(...))` higher-order forms of the vector math:
   * interpreted references for the codegen'd `VecExprs`. Both fold
@@ -36,8 +36,8 @@ class SimilaritySpec extends SparkSpec {
       (Array(1.5f, -2.25f, 3.125f, 0.001f), Array(0.5f, 4.75f, -1.5f, 2.125f))
     ).toDF("a", "b")
     val r = df.select(
-      VectorOps.dot($"a", $"b"), HofForms.dot($"a", $"b"),
-      VectorOps.sqDist($"a", $"b"), HofForms.sqDist($"a", $"b")).head
+      VecExprs.dot($"a", $"b"), HofForms.dot($"a", $"b"),
+      VecExprs.sqDist($"a", $"b"), HofForms.sqDist($"a", $"b")).head
     assert(r.getDouble(0) == r.getDouble(1))
     assert(r.getDouble(2) == r.getDouble(3))
   }
@@ -50,13 +50,13 @@ class SimilaritySpec extends SparkSpec {
     assert(r.getDouble(0) == 11.0 && r.getDouble(1) == 8.0)
   }
 
-  test("VectorOps dot/norm/cosine exact on unit vectors") {
+  test("VecExprs dot/norm/cosine exact on unit vectors") {
     val df = Seq((Array(1.0f, 0f, 0f), Array(0f, 1.0f, 0f))).toDF("a", "b")
-    assert(df.select(VectorOps.dot($"a", $"b")).head.getDouble(0) == 0.0)
-    assert(df.select(VectorOps.norm($"a")).head.getDouble(0) == 1.0)
+    assert(df.select(VecExprs.dot($"a", $"b")).head.getDouble(0) == 0.0)
+    assert(df.select(VecExprs.norm($"a")).head.getDouble(0) == 1.0)
     val same = Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f))).toDF("a", "b")
-    assert(math.abs(same.select(VectorOps.cosine($"a", $"b")).head.getDouble(0) - 1.0) < 1e-12)
-    assert(same.select(VectorOps.norm($"a")).head.getDouble(0) == 5.0)
+    assert(math.abs(same.select(VecExprs.cosine($"a", $"b")).head.getDouble(0) - 1.0) < 1e-12)
+    assert(same.select(VecExprs.norm($"a")).head.getDouble(0) == 5.0)
   }
 
   test("bruteForceTopK ranks the near vector first, opposite last") {
@@ -121,27 +121,9 @@ class SimilaritySpec extends SparkSpec {
     assert(topk(corpus.coalesce(1)) == topk(corpus.repartition(7)))
   }
 
-  test("SqrtComparisonRule rewrites sqrt(vec_sqdist) radius filters exactly") {
-    val df = Seq(
-      (0L, Array(0.0f, 0.0f)), (1L, Array(3.0f, 4.0f)), (2L, Array(0.3f, 0.4f))
-    ).toDF("id", "v")
-    val q = Array(0.0f, 0.0f)
-    val filtered = df.filter(
-      sqrt(VectorOps.sqDist($"v", typedLit(q))) < 1.0)
-    // rule fired: no SQRT left in the optimized plan
-    assert(!filtered.queryExecution.optimizedPlan.toString.contains("SQRT"))
-    // and semantics are exact: only the 0.5-distance vector (and origin) pass
-    assert(filtered.select("id").as[Long].collect().toSet == Set(0L, 2L))
-    // negative-argument sqrt (NaN comparisons) is NOT rewritten: x - 5 has
-    // no non-negativity proof, so `sqrt(x-5) < 2` must stay false for x < 5
-    val signs = Seq(1.0, 6.0, 30.0).toDF("x")
-      .filter(sqrt($"x" - 5.0) < lit(2.0))
-    assert(signs.as[Double].collect().toSeq == Seq(6.0)) // 1.0 -> NaN -> false
-  }
-
   test("str_hamming counts byte mismatches plus length difference") {
     val df = Seq(("0101", "0011"), ("111", "111"), ("10", "1011")).toDF("a", "b")
-    val got = df.select(graft.functions.VecExprs.hamming($"a", $"b"))
+    val got = df.select(VecExprs.hamming($"a", $"b"))
       .collect.map(_.getInt(0)).toSeq
     assert(got == Seq(2, 0, 2))
     assert(spark.sql("SELECT str_hamming('abc', 'abd')").head.getInt(0) == 1)
