@@ -2,24 +2,14 @@ package graft.nlp.kernels
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer}
+import org.apache.spark.ml.feature.{HashingTF, IDF}
 import org.apache.spark.ml.linalg.{Vector => MlVector}
 import graft.nlp.text.Text
 
-/** Pluggable model kernels (SURVEY.md §2.10 B1–B6, §7.3).
-  *
-  * The reference's kernels are pretrained HF/spaCy models; this environment
-  * is zero-egress, so each trait ships a deterministic local implementation
-  * that reproduces the DATAFLOW semantics (input cols → output cols, grain,
-  * dedup/broadcast shape). A real ONNX/DJL kernel can implement the same
-  * trait via `mapPartitions` (model loaded once per partition — the Spark
-  * equivalent of the reference's load-once-per-process) without touching
-  * any caller.
-  */
-trait Embedder {
-  /** Add `outCol: array<float>` derived from `textCol`. */
-  def embed(df: DataFrame, textCol: String, outCol: String): DataFrame
-}
+// Deterministic local kernels (SURVEY.md §2.10 B1–B5, §7.3). The
+// reference's kernels are pretrained HF models; with no model weights to
+// load, each is a deterministic local implementation that reproduces the
+// DATAFLOW semantics (input cols → output cols, grain).
 
 /** TF-IDF document vectors via MLlib HashingTF+IDF (reference B1/B2:
   * BERT/MiniLM mean-pooled vectors — word_wizard.py:150-231). Deterministic
@@ -27,7 +17,8 @@ trait Embedder {
   * (one fit pass + one transform pass, no driver data), and dimension-
   * configurable like the reference's 384/768/1024.
   */
-final class TfIdfEmbedder(dim: Int = 64) extends Embedder {
+final class TfIdfEmbedder(dim: Int = 64) {
+  /** Add `outCol: array<float>` derived from `textCol`. */
   def embed(df: DataFrame, textCol: String, outCol: String): DataFrame = {
     val tmpToks = outCol + "_toks"
     val tmpTf = outCol + "_tf"
@@ -42,76 +33,10 @@ final class TfIdfEmbedder(dim: Int = 64) extends Embedder {
   }
 }
 
-/** The mapPartitions inference seam (SURVEY.md B1 design): a "model" is
-  * instantiated once per partition and fed fixed-size batches — exactly how
-  * a real ONNX/DJL transformer kernel plugs in. The stub model is a
-  * deterministic hashing projection (token → dim via murmur-style md5
-  * prefix, L2-normalized counts), so the plumbing — partition-level init,
-  * batch shape, array<float> output — is real and testable without
-  * shipping weights.
-  */
-final class BatchedEmbedder(dim: Int = 64, batchSize: Int = 32) extends Embedder {
-  def embed(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    val d = dim
-    val bs = batchSize
-    // distinct → embed → join back (the A10 economy: duplicate texts cost
-    // one inference, and the expensive kernel sees deduped partitions)
-    val vecs = df.select(col(textCol)).distinct().as[String].mapPartitions { it =>
-      // "model load" happens once per partition:
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def embedBatch(batch: Seq[String]): Seq[Array[Float]] = batch.map { text =>
-        val v = new Array[Float](d)
-        text.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
-          md.reset()
-          val h = md.digest(tok.getBytes("UTF-8"))
-          val idx = math.floorMod(java.nio.ByteBuffer.wrap(h).getInt, d)
-          v(idx) += 1f
-        }
-        val n = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-        if (n > 0) v.map(_ / n) else v
-      }
-      it.grouped(bs).flatMap(b => b.zip(embedBatch(b)))
-    }.toDF(textCol + "_k", outCol)
-    // join back on md5(text), not the text itself: the join would otherwise
-    // shuffle and compare multi-KB strings as its key. 32 fixed bytes hash/
-    // sort orders of magnitude cheaper at corpus scale (same keying as
-    // Sentiment.score, ADVICE r02).
-    val keyCol = textCol + "_kmd5"
-    val keyed = vecs.select(md5(col(textCol + "_k")).as(keyCol), col(outCol))
-    df.withColumn(keyCol, md5(col(textCol)))
-      .join(keyed, Seq(keyCol), "left")
-      .drop(keyCol)
-  }
-}
-
 /** B5: extractive lead-k summarizer (reference: BART/Pegasus generation —
   * word_wizard.py:298-361). Pure Column expression: first `k` sentences.
   */
 object LeadKSummarizer {
   def summarize(textCol: Column, k: Int = 2): Column =
     array_join(slice(Text.sentences(textCol), 1, k), " ")
-}
-
-/** B6: entity extraction heuristic (reference: spaCy NER with EntityRuler
-  * exclusions — word_wizard.py:430-511). Capitalized multi-word spans minus
-  * a configurable exclusion list (the reference TODO README.md:115 asks for
-  * exactly this parameter).
-  */
-final class HeuristicEntityExtractor(
-    exclusions: Seq[String] = Seq("The", "This", "That", "Quantum", "AI")) {
-
-  /** array<string> of entity candidates in `textCol`. Excluded words are
-    * stripped from span heads ("The Nvidia Corporation" → "Nvidia
-    * Corporation") and spans that ARE an excluded word are dropped — the
-    * EntityRuler-style pre-pass of the reference (word_wizard.py:463-476).
-    */
-  def entities(textCol: Column): Column = {
-    val spans = regexp_extract_all(textCol,
-      lit("([A-Z][a-zA-Z]+(?: [A-Z][a-zA-Z]+)*)"), lit(1))
-    val excl = array(exclusions.map(lit): _*)
-    val headRe = "^(" + exclusions.mkString("|") + ")\\s+"
-    val stripped = transform(spans, s => regexp_replace(s, headRe, ""))
-    filter(stripped, s => s =!= "" && !array_contains(excl, s))
-  }
 }

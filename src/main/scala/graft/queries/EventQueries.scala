@@ -7,10 +7,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import graft.Tables
 import graft.util.Exact
 
-/** Batch twin of the streaming operators (graft.streaming.Streams): the
-  * same event-time windowed aggregation a `readStream` pipeline runs with
-  * a watermark, here over the at-rest events table — Trigger.AvailableNow
-  * semantics.
+/** Event-time windowed aggregation over the at-rest events table, in
+  * batch: the reference has no streaming operators (SURVEY.md §2.9), and a
+  * Structured Streaming query over the same data has the same semantics.
   *
   * events.ts arrives in one of two parquet vintages, handled adaptively by
   * [[tsMicros]]: TIMESTAMP(NANOS) read as a nanos long
@@ -66,8 +65,7 @@ object EventQueries {
 
   /** q35: per-user session windows (30-minute inactivity gap) — Spark's
     * session_window in batch; the oracle derives the same sessions with
-    * gaps-and-islands SQL (lag → new-session flag → running sum). The
-    * streaming twin is Streams.sessionize.
+    * gaps-and-islands SQL (lag → new-session flag → running sum).
     */
   def q35SessionWindows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -4,10 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Oracle query for the multimodal binary-column plumbing: text bytes as
-  * an opaque `binary` column with byte-length + content-hash metadata —
-  * the SQL-expressible slice of graft.multimodal (the batched decode
-  * kernels are Dataset-typed and spec-tested instead).
+/** Oracle query for binary-column plumbing: text bytes as an opaque
+  * `binary` column with byte-length + content-hash metadata.
   */
 object MultimodalQueries {
 

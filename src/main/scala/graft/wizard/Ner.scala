@@ -12,9 +12,9 @@ import org.apache.spark.sql.expressions.Window
   * count win (ties by insertion order → here pinned to term asc for
   * determinism, SURVEY.md §7.4.1).
   *
-  * The kernel (what counts as an entity) is pluggable; the deterministic
-  * local heuristic is "token of length ≥ minLen" standing in for the
-  * capitalized-span + suffix heuristic — the dataflow (explode with a weight
+  * The kernel (what counts as an entity) is the deterministic local
+  * heuristic "token of length ≥ minLen", standing in for the reference's
+  * spaCy ORG entities — the dataflow (explode with a weight
   * literal per source zone → groupBy(cluster, term) → sum(weight) → window
   * top-n) is the operator under test, and it is one shuffle bounded by
   * |cluster|×|vocabulary|.

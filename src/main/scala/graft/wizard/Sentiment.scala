@@ -14,8 +14,7 @@ import graft.nlp.text.Text
   * it is the difference between scoring 100 TB of rows and scoring only the
   * distinct texts.
   *
-  * Kernel: a deterministic lexicon scorer (SentimentScorer trait lets a real
-  * model kernel plug in via mapPartitions without changing the dataflow).
+  * Kernel: a deterministic lexicon scorer ([[lexiconClass]]).
   */
 object Sentiment {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.nlp.text.Text
-import graft.nlp.kernels.{Embedder, TfIdfEmbedder, LeadKSummarizer}
+import graft.nlp.kernels.{TfIdfEmbedder, LeadKSummarizer}
 
 /** Fluent NLP chain over an immutable DataFrame — the Spark re-expression
   * of the reference's `WordWizard` (word_wizard.py:115-148 and §3.3 of
@@ -44,8 +44,7 @@ import graft.nlp.kernels.{Embedder, TfIdfEmbedder, LeadKSummarizer}
   * |vocabulary|-bounded aggregates, never the corpus.
   */
 final case class WordWizard(df: DataFrame, interest: String = "paragraph",
-                            idCol: String = WordWizard.RowId,
-                            embedder: Embedder = new TfIdfEmbedder(64)) {
+                            idCol: String = WordWizard.RowId) {
   import WordWizard._
 
   // ---- suffix contract (word_wizard.py:106-113) --------------------------
@@ -74,18 +73,19 @@ final case class WordWizard(df: DataFrame, interest: String = "paragraph",
 
   // ---- stages ------------------------------------------------------------
 
-  /** B1: document vectors from `interest` text → `{interest}_word_embeddings`. */
-  def createWordEmbeddings(): WordWizard =
-    copy(df = embedder.embed(df, interest, embCol)
+  /** 64-dim TF-IDF vectors of the `interest` text in `outCol`, cached. */
+  private def embedInto(outCol: String): WordWizard =
+    copy(df = new TfIdfEmbedder(64).embed(df, interest, outCol)
       .persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** B1: document vectors from `interest` text → `{interest}_word_embeddings`. */
+  def createWordEmbeddings(): WordWizard = embedInto(embCol)
 
   /** B2: sentence-grain vectors → `{interest}_sentence_embeddings` (the
     * local kernel embeds the same text; the column contract is what
     * downstream consumes).
     */
-  def createSentenceEmbeddings(): WordWizard =
-    copy(df = embedder.embed(df, interest, sentEmbCol)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+  def createSentenceEmbeddings(): WordWizard = embedInto(sentEmbCol)
 
   /** B3: cluster the (sentence-) embedding column. `k = Some(n)` fixes k;
     * None runs the reference's silhouette scan (word_wizard.py:675-717)

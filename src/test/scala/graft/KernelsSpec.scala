@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.nlp.kernels.{BatchedEmbedder, HeuristicEntityExtractor, LeadKSummarizer, TfIdfEmbedder}
+import graft.nlp.kernels.{LeadKSummarizer, TfIdfEmbedder}
 
 class KernelsSpec extends SparkSpec {
   import spark.implicits._
@@ -10,25 +10,6 @@ class KernelsSpec extends SparkSpec {
     (0L, "spark shuffle executor"), (1L, "spark shuffle executor"),
     (2L, "butter flour sugar oven"), (3L, "")
   ).toDF("id", "text")
-
-  test("BatchedEmbedder: dims, L2 norm, dup texts share vectors, deterministic") {
-    val out = new BatchedEmbedder(dim = 32, batchSize = 2)
-      .embed(docs, "text", "emb").cache()
-    assert(out.count() == 4)
-    val vecs = out.collect.map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
-    assert(vecs.values.forall(_.size == 32))
-    assert(vecs(0L) == vecs(1L))
-    assert(vecs(0L) != vecs(2L))
-    val norm = math.sqrt(vecs(0L).map(x => x.toDouble * x).sum)
-    assert(math.abs(norm - 1.0) < 1e-5)
-    // empty text -> zero vector, not a dropped row
-    assert(vecs(3L).forall(_ == 0f))
-    val again = new BatchedEmbedder(dim = 32, batchSize = 3)
-      .embed(docs, "text", "emb").collect
-      .map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
-    assert(again == vecs) // batch size must not change results
-    out.unpersist()
-  }
 
   test("TfIdfEmbedder produces fixed-dim float vectors") {
     val out = new TfIdfEmbedder(16).embed(docs, "text", "emb")
@@ -39,14 +20,5 @@ class KernelsSpec extends SparkSpec {
     val got = Seq("One here. Two now. Three末. Four.").toDF("t")
       .select(LeadKSummarizer.summarize($"t", 2)).head.getString(0)
     assert(got == "One here. Two now.")
-  }
-
-  test("HeuristicEntityExtractor finds capitalized spans minus exclusions") {
-    val got = Seq("The Nvidia Corporation met Advanced Micro Devices and Quantum ideas")
-      .toDF("t").select(new HeuristicEntityExtractor().entities($"t"))
-      .head.getSeq[String](0)
-    assert(got.contains("Nvidia Corporation"))
-    assert(got.contains("Advanced Micro Devices"))
-    assert(!got.contains("The") && !got.contains("Quantum"))
   }
 }

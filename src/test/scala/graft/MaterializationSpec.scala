@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.DedupQueries
@@ -11,9 +10,7 @@ import graft.queries.DedupQueries
   * the query's frame is no longer referenced.
   */
 class MaterializationSpec extends SparkSpec {
-  // the fixture scale factors: siblings of the one SparkEntry.entry reads
-  private lazy val dir =
-    new Path(SparkEntry.entry(spark).inputFiles.head).getParent.getParent.toString + "/sf0.001"
+  private lazy val dir = fixtureDir("sf0.001")
 
   private val queries = Seq(
     "q25_neardup_lsh" -> (DedupQueries.q25NeardupLsh _),

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.hadoop.fs.Path
 import graft.clean.Cleaner
 
 /** The plan properties README.md and PLANS.md claim, checked on the
@@ -9,10 +8,6 @@ import graft.clean.Cleaner
   * ETL clean stage's expression count, checked on its optimized plan.
   */
 class PlanSpec extends SparkSpec {
-  // the fixture scale factors: siblings of the one SparkEntry.entry reads
-  private lazy val sfRoot =
-    new Path(SparkEntry.entry(spark).inputFiles.head).getParent.getParent.toString
-
   private val claims = Seq(
     "q3_filter_revenue" -> Seq("PushedFilters: [IsNotNull(l_shipdate)"),
     "q12_md5" -> Seq("ReadSchema: struct<doc_id:bigint,text:string>"),
@@ -21,7 +16,7 @@ class PlanSpec extends SparkSpec {
 
   test("pushdown, pruning and broadcast claims hold on the executed plans") {
     for ((name, wants) <- claims) {
-      val df = SparkEntry.queries(name)(spark, s"$sfRoot/sf0.001")
+      val df = SparkEntry.queries(name)(spark, fixtureDir("sf0.001"))
       df.collect() // finalize this frame's AQE plan
       val plan = df.queryExecution.executedPlan.toString
       spark.catalog.clearCache()

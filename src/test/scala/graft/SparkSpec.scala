@@ -3,6 +3,7 @@ package graft
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +21,12 @@ object TestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** The directory of fixture scale factor `sf` ("sf0.001", "sf0.1"): a
+    * sibling of the one `SparkEntry.entry` reads.
+    */
+  def fixtureDir(sf: String): String =
+    new Path(SparkEntry.entry(spark).inputFiles.head).getParent.getParent.toString + "/" + sf
 
   /** Spark jobs submitted while `body` runs on this thread. A marker job
     * run after it flushes the listener bus: events arrive in order, so once

@@ -12,11 +12,6 @@ import graft.queries.SimQueries
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  // the fixture scale factors: siblings of the one SparkEntry.entry reads
-  private lazy val sfRoot =
-    new Path(SparkEntry.entry(spark).inputFiles.head).getParent.getParent.toString
-  private def sf(name: String) = s"$sfRoot/$name"
-
   /** A session on the shared context with its own parquet conf. */
   private def sessionWith(nanosAsLong: Boolean): SparkSession = {
     val s = spark.newSession()
@@ -25,7 +20,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("footer schema and row count equal the inferring reader's on every fixture table") {
-    for (nanosAsLong <- Seq(true, false); dir <- Seq(sf("sf0.001"), sf("sf0.1"));
+    for (nanosAsLong <- Seq(true, false); dir <- Seq(fixtureDir("sf0.001"), fixtureDir("sf0.1"));
          name <- Tables.names) {
       val s = sessionWith(nanosAsLong)
       val expected = s.read.parquet(s"$dir/$name.parquet")
@@ -79,7 +74,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("opening tables submits no job; building q41 at most two") {
-    val dir = sf("sf0.001")
+    val dir = fixtureDir("sf0.001")
     assert(jobsDuring(Tables(spark, dir, "lineitem")) == 0)
     assert(jobsDuring(Tables.balanced(spark, dir, "documents")) == 0)
     assert(jobsDuring(Tables.rowCount(spark, dir, "embeddings")) == 0)

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.linalg.{Vector => MlVector, Vectors}
@@ -99,7 +98,7 @@ class WizardSpec extends SparkSpec {
   }
 
   test("q18: sentiment equals scoring every row on its own") {
-    val dir = new Path(SparkEntry.entry(spark).inputFiles.head).getParent.toString
+    val dir = fixtureDir("sf0.001")
     val got = NlpQueries.q18Sentiment(spark, dir).collect.toSeq
     val want = Tables.balanced(spark, dir, "documents")
       .select($"doc_id", Sentiment.lexiconClass(Text.tokens($"text")).as("sentiment"))
@@ -207,13 +206,15 @@ class WizardSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      val before = sc.getPersistentRDDs.keySet
+      // detached copies: a `keySet` view would keep the RDDs it saw alive
+      def persisted = sc.getPersistentRDDs.keysIterator.toSet
+      val before = persisted
       marker()
       intercept[Exception](Cluster.kmeansSilhouette(input, "vec", "cl", kMin = 2, kMax = 5))
       marker()
       jobsDuring(()) // flushes the listener bus: `started` and `failed` are complete
-      assert(sc.getPersistentRDDs.keySet == before,
-        s"left behind: ${(sc.getPersistentRDDs.keySet -- before).map(sc.getPersistentRDDs)}")
+      assert(persisted == before,
+        s"left behind: ${(persisted -- before).map(sc.getPersistentRDDs)}")
       assert(input.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       // every job id taken between the markers started (the scheduler
       // rejected none), and the last of them is the one that failed

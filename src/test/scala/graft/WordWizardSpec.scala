@@ -54,28 +54,21 @@ class WordWizardSpec extends SparkSpec {
     out.unpersist()
   }
 
-  test("BatchedEmbedder drives the full chain through the mapPartitions seam") {
-    // the default wizard never exercises the batched-inference path; this
-    // pins the end-to-end contract a real ONNX/DJL kernel would plug into
+  test("the default embedder feeds the whole chain; identical texts share vectors") {
     val w = WordWizard(corpus, "paragraph")
-      .copy(embedder = new graft.nlp.kernels.BatchedEmbedder(dim = 32, batchSize = 4))
       .createSentenceEmbeddings()
       .clusterEmbeddings(k = Some(2))
       .topicModelling(nWords = 3)
     val emb = "paragraph_sentence_embeddings"
     val out = w.df.cache()
     assert(out.count() == 24)
-    // every row embedded (left join found its md5-keyed vector), right dim
+    // every row embedded, at the chain's 64 dims
     assert(out.filter(col(emb).isNull).count() == 0)
-    assert(out.select(size(col(emb))).head.getInt(0) == 32)
-    // duplicate texts get identical vectors (distinct→embed→join-back)
-    val dup = (corpus union corpus)
-    val dw = WordWizard(dup, "paragraph")
-      .copy(embedder = new graft.nlp.kernels.BatchedEmbedder(dim = 16, batchSize = 4))
-      .createWordEmbeddings()
+    assert(out.select(size(col(emb))).head.getInt(0) == 64)
+    val dw = WordWizard(corpus union corpus, "paragraph").createWordEmbeddings()
     assert(dw.df.select(col("paragraph"), col("paragraph_word_embeddings"))
       .distinct().count() == 24)
-    out.unpersist()
+    spark.catalog.clearCache()
   }
 
   test("body mode dedups to article grain") {
@@ -135,7 +128,8 @@ class WordWizardSpec extends SparkSpec {
   test("a default chain keeps exactly its two documented caches until released") {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
-    val before = sc.getPersistentRDDs.keySet
+    // a detached copy: the `keySet` view would keep the RDDs it saw alive
+    val before = sc.getPersistentRDDs.keysIterator.toSet
     val w1 = WordWizard(corpus, "paragraph").createSentenceEmbeddings()
     val w2 = w1.clusterEmbeddings()
     val w = w2.entityRecognition().summarizeMedoids().findSentiment()
